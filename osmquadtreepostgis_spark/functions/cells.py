@@ -5,10 +5,12 @@ Two tiers, chosen by what the math needs:
 * **pure-Column (JVM, codegen'd)**: anything that is integer bit math
   on an existing key — ``cell_parent_col``, ``cell_depth_col``. These
   stay inside whole-stage codegen; no Python on the hot path.
+  ``cell_encode_col`` is the generated-SQL point encode, for plans
+  that must not add a Python stage.
 * **Arrow-batched pandas UDFs**: the trig-bearing encode steps
-  (``cell_encode_udf``, ``bbox_cell_udf``, ``cell_cover_udf``) — the
-  BASELINE-mandated "batched H3/S2 cell encoding in pandas/Arrow
-  UDFs". numpy kernels from :mod:`..quadtree`, no per-row Python.
+  (``cell_encode_udf``, ``cell_cover_udf``) — the BASELINE-mandated
+  "batched H3/S2 cell encoding in pandas/Arrow UDFs". numpy kernels
+  from :mod:`..quadtree`, no per-row Python.
 
 The reference's equivalents: ObjectQuadtree / BlockQuadtree column
 sources (/root/reference/src/postgiswriter.cpp:417-420) and the locs
@@ -27,13 +29,12 @@ from .. import quadtree as qt
 
 __all__ = [
     "cell_encode_udf",
-    "bbox_cell_udf",
     "cell_cover_udf",
     "cell_neighbors_udf",
     "cell_parent_col",
     "cell_tile_col",
     "cell_depth_col",
-    "cell_encode_expr",
+    "cell_encode_col",
 ]
 
 
@@ -46,25 +47,6 @@ def cell_encode_udf(depth: int):
         return pd.Series(k)
 
     return _encode
-
-
-def bbox_cell_udf(max_depth: int = qt.MAX_DEPTH):
-    """pandas UDF: bbox -> deepest containing cell (max-depth split)."""
-
-    @F.pandas_udf(T.LongType())
-    def _bbox(
-        minlon: pd.Series, minlat: pd.Series, maxlon: pd.Series, maxlat: pd.Series
-    ) -> pd.Series:
-        k = qt.bbox_to_cell(
-            minlon.to_numpy(np.float64),
-            minlat.to_numpy(np.float64),
-            maxlon.to_numpy(np.float64),
-            maxlat.to_numpy(np.float64),
-            max_depth,
-        )
-        return pd.Series(k)
-
-    return _bbox
 
 
 def cell_cover_udf(depth: int):
@@ -126,20 +108,15 @@ def cell_depth_col(key) -> Column:
     return c.bitwiseAND(F.lit((1 << qt.DEPTH_BITS) - 1))
 
 
-def cell_encode_expr(lon: str, lat: str, depth: int) -> Column:
-    """JVM-only point encode via generated SQL (for comparison /
-    contexts where a Python worker is undesirable). The canonical
-    engine path is cell_encode_udf."""
-    return F.expr(qt.sql_point_to_cell(lon, lat, depth))
-
-
 def cell_encode_col(lon_expr: str, lat_expr: str, depth: int) -> Column:
     """PURE-CATALYST point->cell encode: the JVM twin of
     :func:`cell_encode_udf` (same packing, same clamps — property-
     tested against the numpy kernel in tests/test_sql_surface.py via
     the identical st_point_to_cell body). Use this when the encode
-    should NOT ride a Python stage — e.g. the flagship keeps its one
-    Arrow exchange for the PIP ray-cast only and computes the tile key
-    JVM-side (VERDICT r2 next-round #2). Takes SQL expression strings
-    (column names or exprs), returns a codegen'd bigint Column."""
+    should NOT ride a Python stage. The generated expression is large
+    (trig + magic-mask spread), so every plan that contains it pays
+    for analysis and codegen of it; when a plan already has a Python
+    stage over the points, encoding there is cheaper. Takes SQL
+    expression strings (column names or exprs), returns a codegen'd
+    bigint Column."""
     return F.expr(qt.sql_point_to_cell(lon_expr, lat_expr, depth))

@@ -2,11 +2,10 @@
 
 The engine's equivalents of the reference's geometry ColumnSources
 (/root/reference/src/postgiswriter.hpp:97-112) and GEOS calls
-(src/validategeoms.cpp): Length, Area (1-dp rounded,
-src/postgiswriter.cpp:892-894, 1045-1047), RepresentativePoint,
-BoundaryLine, topology simplify (st_simplify(way, 612),
-osmquadtreepostgis/__init__.py:409), validity flag, hex encoding
-(src/postgiswriter.cpp:232-240).
+(src/validategeoms.cpp): Area (1-dp rounded,
+src/postgiswriter.cpp:892-894, 1045-1047), topology simplify
+(st_simplify(way, 612), osmquadtreepostgis/__init__.py:409), validity
+flag and repair, bbox polygon construction.
 
 All are Arrow-batched pandas UDFs over the numpy kernels in
 :mod:`..geom` — geometry blobs are parsed per unique value per batch,
@@ -23,16 +22,11 @@ from pyspark.sql import types as T
 from .. import geom as g
 
 __all__ = [
-    "wkb_length_udf",
     "wkb_area_udf",
-    "wkb_point_on_surface_udf",
-    "wkb_boundary_udf",
     "wkb_simplify_udf",
     "wkb_is_valid_udf",
     "wkb_make_valid_udf",
-    "wkb_parts_udf",
     "bbox_to_wkb_udf",
-    "hex_col",
 ]
 
 
@@ -45,20 +39,6 @@ def _for_each_wkb(way: pd.Series, fn):
         gt, srid, payload = g.parse_wkb(bytes(buf))
         out.append(fn(gt, payload))
     return out
-
-
-@F.pandas_udf(T.DoubleType())
-def wkb_length_udf(way: pd.Series) -> pd.Series:
-    """Linestring length (mercator metres), rounded 1dp."""
-
-    def ln(gt, payload):
-        if gt != 2:
-            return 0.0
-        return float(
-            g.round1_half_away(g.line_length(payload, np.array([0, len(payload)]))[0])
-        )
-
-    return pd.Series(_for_each_wkb(way, ln), dtype="float64")
 
 
 @F.pandas_udf(T.DoubleType())
@@ -80,37 +60,6 @@ def wkb_area_udf(way: pd.Series) -> pd.Series:
         return float(g.round1_half_away(tot))
 
     return pd.Series(_for_each_wkb(way, area), dtype="float64")
-
-
-@F.pandas_udf(T.BinaryType())
-def wkb_point_on_surface_udf(way: pd.Series) -> pd.Series:
-    """way_point: interior-guaranteed representative point as WKB."""
-
-    def pos(gt, payload):
-        rings = payload if gt == 3 else (payload[0] if gt == 6 else None)
-        if rings is None:
-            return None
-        x, y = g.point_on_surface(rings)
-        return g.wkb_point(x, y)
-
-    return pd.Series(_for_each_wkb(way, pos))
-
-
-@F.pandas_udf(T.ArrayType(T.BinaryType()))
-def wkb_boundary_udf(way: pd.Series) -> pd.Series:
-    """way_exterior: polygon rings as linestring WKBs."""
-
-    def bnd(gt, payload):
-        if gt == 3:
-            return [g.wkb_linestring(r) for r in g.boundary_lines(payload)]
-        if gt == 6:
-            out = []
-            for rings in payload:
-                out += [g.wkb_linestring(r) for r in g.boundary_lines(rings)]
-            return out
-        return None
-
-    return pd.Series(_for_each_wkb(way, bnd))
 
 
 def wkb_simplify_udf(tolerance: float):
@@ -219,22 +168,6 @@ def wkb_make_valid_udf(way: pd.Series) -> pd.Series:
     return pd.Series(_for_each_wkb(way, mk))
 
 
-@F.pandas_udf(T.ArrayType(T.BinaryType()))
-def wkb_parts_udf(way: pd.Series) -> pd.Series:
-    """Multipolygon -> per-part polygon WKBs (the split_multipolygons
-    explode, src/postgiswriter.cpp:1125-1133; pair with posexplode for
-    the Part column)."""
-
-    def parts(gt, payload):
-        if gt == 3:
-            return [g.wkb_polygon(payload)]
-        if gt == 6:
-            return [g.wkb_polygon(rings) for rings in payload]
-        return None
-
-    return pd.Series(_for_each_wkb(way, parts))
-
-
 def bbox_to_wkb_udf(round_2dp: bool = False):
     """lon/lat bbox -> EPSG:3857 polygon WKB (fixture/geometry
     construction, the F14 constructor path). ``round_2dp`` is the
@@ -261,8 +194,3 @@ def bbox_to_wkb_udf(round_2dp: bool = False):
         return pd.Series(out)
 
     return _bb
-
-
-def hex_col(way) -> F.Column:
-    """Hex encoding at the CSV-export boundary (src/postgiswriter.cpp:232)."""
-    return F.hex(F.col(way) if isinstance(way, str) else way)

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "md5_int64",
-    "word_shingles",
     "minhash_signature",
     "simhash64",
     "sql_md5_int64",
@@ -114,14 +113,9 @@ def word_shingles_tokens(toks: Column, n: int = 3) -> Column:
     return let_(toks, lambda tk: _word_shingles_of(tk, n))
 
 
-def word_shingles(text, n: int = 3) -> Column:
-    """Distinct n-gram word shingles (space-joined) of a text column."""
-    toks = F.split(F.col(text) if isinstance(text, str) else text, " ")
-    return word_shingles_tokens(toks, n)
-
-
 def sql_word_shingles(text: str, n: int = 3) -> str:
-    """DuckDB twin of word_shingles (list of distinct n-gram strings)."""
+    """DuckDB twin of ``word_shingles_tokens(split(text, ' '), n)``
+    (list of distinct n-gram strings)."""
     toks = f"string_split({text}, ' ')"
     parts = " || ' ' || ".join(f"({toks})[i + {j}]" for j in range(n))
     return (

@@ -27,7 +27,6 @@ __all__ = [
     "knn_grid",
     "knn_grid_guaranteed",
     "ann_cosine_pairs",
-    "ann_cosine_pairs_blocked",
     "ann_cosine_pairs_grid",
     "ann_cosine_pairs_lsh",
     "ann_cosine_topk",
@@ -310,68 +309,6 @@ def ann_cosine_topk(
     )
 
 
-def ann_cosine_pairs_blocked(
-    emb: DataFrame, threshold: float, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """All id<id2 pairs with cosine >= threshold via broadcast matrix +
-    per-batch numpy GEMM (one mapInArrow pass, no join).
-
-    BROADCASTABLE-SIDE variant only: it collects the table to the
-    driver and broadcasts the matrix — correct and fastest when the
-    table is dimension-table-sized, a driver-OOM scale-killer
-    otherwise. The DEFAULT all-pairs operator is ann_cosine_pairs_grid
-    (distributed block-pair cogroup GEMM, no driver state); the
-    high-threshold near-dup path is ann_cosine_pairs_lsh.
-    """
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    rows = emb.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    order = np.argsort(ids)
-    ids = ids[order]
-    mat = np.array([rows[i][1] for i in order], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    b = emb.sparkSession.sparkContext.broadcast((ids, mat))
-
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType(), False),
-            T.StructField("id_b", T.LongType(), False),
-            T.StructField("cos_sim", T.DoubleType(), False),
-        ]
-    )
-    i_id = emb.schema.fieldNames().index(id_col)
-    i_vec = emb.schema.fieldNames().index(vec_col)
-
-    def block(batches):
-        all_ids, all_mat = b.value
-        for rb in batches:
-            bid = rb.column(i_id).to_numpy(zero_copy_only=False)
-            vecs = np.array(rb.column(i_vec).to_pylist(), dtype=np.float64)
-            if len(vecs) == 0:
-                continue
-            vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-            sims = vecs @ all_mat.T
-            ra, rb_ = np.nonzero(sims >= threshold)
-            ia = bid[ra]
-            ib = all_ids[rb_]
-            keep = ia < ib
-            if not keep.any():
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ia[keep]),
-                    pa.array(ib[keep]),
-                    pa.array(np.round(sims[ra[keep], rb_[keep]], 4)),
-                ],
-                names=["id_a", "id_b", "cos_sim"],
-            )
-
-    return emb.select(id_col, vec_col).mapInArrow(block, schema)
-
-
 def ann_cosine_pairs_grid(
     emb: DataFrame,
     threshold: float,
@@ -381,8 +318,7 @@ def ann_cosine_pairs_grid(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact all-pairs cosine >= threshold, fully distributed: block-pair
-    cogroup GEMM. No driver-side materialization (contrast
-    ann_cosine_pairs_blocked, which broadcasts the whole matrix).
+    cogroup GEMM. No driver-side materialization.
 
     Plan shape: every vector gets a block id ``bid = xxhash64(id) % B``;
     the B*(B+1)/2 unordered block pairs (i <= j) are the shuffle keys.

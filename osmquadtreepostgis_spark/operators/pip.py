@@ -5,24 +5,31 @@ over its output tables (/root/reference/osmquadtreepostgis/
 __init__.py:243-250, 293). At 100 TB there is no gist: these are the
 two canonical distributed strategies (SURVEY.md §2.3 J4/J5):
 
-* ``pip_join_broadcast`` — the polygon layer is small (admin
+* ``pip_probe_arrow`` — the polygon layer is small (admin
   boundaries): build a cell-bucketed index over the polygons on the
-  driver, broadcast it, and probe with ``mapInPandas`` — **zero
-  shuffle** on the (huge) point side; per-batch work is vectorized
-  numpy ray casting grouped by candidate polygon.
+  driver, broadcast it, and probe in ONE ``mapInArrow`` pass — **zero
+  shuffle** on the (huge) point side. Per batch the single trig pass
+  encodes each point's tile key (emitted with the hit), the bucket
+  cell is its integer ancestor, and the ray cast is vectorized numpy
+  grouped by candidate polygon. The per-batch kernel
+  :func:`pip_probe_batches` is plain pyarrow in, pyarrow out.
 * ``pip_join_shuffle`` — both sides large: explode polygons to their
   covering cells at ``depth``, encode points at the same depth, and
   let Catalyst equi-join on the cell key (AQE handles skewed hot
   cells); exact test afterwards. Shuffle is on cell id — the explicit
   spatial partitioning BASELINE.json mandates.
 
-Both return the same rows; pytest pins them against brute force.
+Both return the same (point, poly_id) rows; pytest pins them against
+brute force.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -33,10 +40,9 @@ from ..functions.cells import cell_cover_udf, cell_encode_udf
 
 __all__ = [
     "PolygonIndex",
-    "pip_join_broadcast",
-    "pip_join_shuffle",
-    "encode_pip_tile",
     "pip_probe_arrow",
+    "pip_probe_batches",
+    "pip_join_shuffle",
 ]
 
 
@@ -47,9 +53,15 @@ class PolygonIndex:
     reference's gist(way) R-tree: candidates by cell, exact test after.
     Polygon rings are kept as lon/lat numpy arrays (PIP is projection-
     invariant for our monotone mercator, and points arrive as lon/lat).
+    ``depth`` may not exceed ``TILE_DEPTH``: the probe derives the
+    bucket cell from the point's tile key.
     """
 
     def __init__(self, polys: list[dict], depth: int = 6):
+        if depth > qt.TILE_DEPTH:
+            raise ValueError(
+                f"index depth {depth} deeper than TILE_DEPTH {qt.TILE_DEPTH}"
+            )
         self.depth = depth
         self.poly_ids = np.array([p["poly_id"] for p in polys], dtype=np.int64)
         self.rings = [p["rings"] for p in polys]  # list[list[(N,2) lon/lat]]
@@ -89,233 +101,80 @@ class PolygonIndex:
         return cls(polys, depth)
 
 
-def pip_join_broadcast(
-    points: DataFrame,
-    index: PolygonIndex,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
-    """points ⋈ polygons with the polygon side broadcast.
-
-    Output: every point column + ``poly_id`` (one row per containing
-    polygon; points in no polygon are dropped — inner-join semantics).
-    """
-    sc = points.sparkSession.sparkContext
-    b = sc.broadcast(index)
-    out_schema = T.StructType(
-        points.schema.fields + [T.StructField("poly_id", T.LongType(), False)]
-    )
-    depth = index.depth
-
-    def probe(batches):
-        idx = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lon = pdf[lon_col].to_numpy(np.float64)
-            lat = pdf[lat_col].to_numpy(np.float64)
-            cells = qt.point_to_cell(lon, lat, depth)
-            # group candidate point-rows by polygon index (vectorized
-            # via a cell->poly expansion merge)
-            order = np.argsort(cells, kind="stable")
-            uc, starts = np.unique(cells[order], return_index=True)
-            hits_rows: list[np.ndarray] = []
-            hits_poly: list[int] = []
-            bounds = np.append(starts, len(order))
-            per_poly: dict[int, list[np.ndarray]] = {}
-            for k, c in enumerate(uc):
-                cand = idx.buckets.get(int(c))
-                if cand is None:
-                    continue
-                rows = order[bounds[k] : bounds[k + 1]]
-                for pi in cand.tolist():
-                    per_poly.setdefault(pi, []).append(rows)
-            for pi, row_lists in per_poly.items():
-                rows = np.concatenate(row_lists)
-                inside = g.points_in_polygon(lon[rows], lat[rows], idx.rings[pi])
-                if inside.any():
-                    hits_rows.append(rows[inside])
-                    hits_poly.append(pi)
-            if not hits_rows:
-                continue
-            all_rows = np.concatenate(hits_rows)
-            all_pids = np.concatenate(
-                [
-                    np.full(len(r), idx.poly_ids[pi], dtype=np.int64)
-                    for r, pi in zip(hits_rows, hits_poly)
-                ]
-            )
-            out = pdf.iloc[all_rows].reset_index(drop=True)
-            out["poly_id"] = all_pids
-            yield out
-
-    return points.mapInPandas(probe, out_schema)
-
-
-def encode_pip_tile(
-    points: DataFrame,
-    index: PolygonIndex,
-    cell_depth: int,
-    tile_depth: int,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
-    """Fused cell-encode + tile-assign + broadcast PIP in ONE
-    mapInArrow pass.
-
-    Chaining a scalar pandas UDF (encode) into a mapInPandas (probe)
-    runs two Python workers per task with a JVM hop between them —
-    measured 4x slower at 32 threads than one fused Arrow exchange.
-    Arrow RecordBatches (mapInArrow) instead of pandas: the output
-    gather (`batch.take`) is C++-side, so string columns never become
-    Python objects. This is the hot-path operator the flagship
-    pipeline/bench use; the unfused building blocks stay for
-    composability. Output: point columns + cell, tile, poly_id.
-    """
-    import pyarrow as pa
-
-    sc = points.sparkSession.sparkContext
-    b = sc.broadcast(index)
-    out_schema = T.StructType(
-        points.schema.fields
-        + [
-            T.StructField("cell", T.LongType(), False),
-            T.StructField("tile", T.LongType(), False),
-            T.StructField("poly_id", T.LongType(), False),
-        ]
-    )
-    depth = index.depth
-    i_lon = points.schema.fieldNames().index(lon_col)
-    i_lat = points.schema.fieldNames().index(lat_col)
-
-    def probe(batches):
-        idx = b.value
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            lon = rb.column(i_lon).to_numpy(zero_copy_only=False)
-            lat = rb.column(i_lat).to_numpy(zero_copy_only=False)
-            cell = qt.point_to_cell(lon, lat, cell_depth)
-            tile = qt.cell_parent(cell, tile_depth)
-            probe_cells = qt.cell_parent(cell, depth)
-            order = np.argsort(probe_cells, kind="stable")
-            uc, starts = np.unique(probe_cells[order], return_index=True)
-            bounds = np.append(starts, len(order))
-            per_poly: dict[int, list[np.ndarray]] = {}
-            for k, c in enumerate(uc):
-                cand = idx.buckets.get(int(c))
-                if cand is None:
-                    continue
-                rows = order[bounds[k] : bounds[k + 1]]
-                for pi in cand.tolist():
-                    per_poly.setdefault(pi, []).append(rows)
-            hits_rows: list[np.ndarray] = []
-            hits_poly: list[int] = []
-            for pi, row_lists in per_poly.items():
-                rows = (
-                    row_lists[0]
-                    if len(row_lists) == 1
-                    else np.concatenate(row_lists)
-                )
-                inside = g.points_in_polygon(lon[rows], lat[rows], idx.rings[pi])
-                if inside.any():
-                    hits_rows.append(rows[inside])
-                    hits_poly.append(pi)
-            if not hits_rows:
-                continue
-            all_rows = np.concatenate(hits_rows)
-            all_pids = np.concatenate(
-                [
-                    np.full(len(r), idx.poly_ids[pi], dtype=np.int64)
-                    for r, pi in zip(hits_rows, hits_poly)
-                ]
-            )
-            taken = rb.take(pa.array(all_rows))  # C++ gather, incl. strings
-            arrays = list(taken.columns) + [
-                pa.array(cell[all_rows]),
-                pa.array(tile[all_rows]),
-                pa.array(all_pids),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=taken.schema.names + ["cell", "tile", "poly_id"]
-            )
-
-    return points.mapInArrow(probe, out_schema)
-
-
 def pip_probe_arrow(
     points: DataFrame,
     index: PolygonIndex,
     lon_col: str = "lon",
     lat_col: str = "lat",
 ) -> DataFrame:
-    """Broadcast PIP probe ONLY, fused in one mapInArrow pass: point
-    columns + ``poly_id``. The Python stage's whole job is the
-    ray-cast; cells are encoded at the INDEX depth only (for bucket
-    lookup) and discarded — callers that need the deep cell/tile key
-    compute it JVM-side afterwards (functions.cells.cell_encode_col),
-    which keeps the Arrow exchange to the point columns + one int64
-    out. This is the minimum-bytes flagship hot path (VERDICT r2
-    next-round #2); :func:`encode_pip_tile` remains for callers that
-    want cell+tile emitted from the same pass."""
-    import pyarrow as pa
+    """points ⋈ polygons with the polygon side broadcast, in one
+    mapInArrow pass. Output: every point column + ``tile`` (the
+    point's cell at ``TILE_DEPTH``) + ``poly_id``, one row per
+    containing polygon; points in no polygon, and points with a NULL
+    or non-finite coordinate, are dropped (inner-join semantics).
 
-    sc = points.sparkSession.sparkContext
-    b = sc.broadcast(index)
+    Arrow RecordBatches in and out: the output gather (``take``) is
+    C++-side, so string columns never become Python objects."""
+    b = points.sparkSession.sparkContext.broadcast(index)
     out_schema = T.StructType(
-        points.schema.fields + [T.StructField("poly_id", T.LongType(), False)]
+        points.schema.fields
+        + [
+            T.StructField("tile", T.LongType(), False),
+            T.StructField("poly_id", T.LongType(), False),
+        ]
     )
-    depth = index.depth
-    i_lon = points.schema.fieldNames().index(lon_col)
-    i_lat = points.schema.fieldNames().index(lat_col)
+    return points.mapInArrow(
+        lambda batches: pip_probe_batches(batches, b.value, lon_col, lat_col),
+        out_schema,
+    )
 
-    def probe(batches):
-        idx = b.value
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            lon = rb.column(i_lon).to_numpy(zero_copy_only=False)
-            lat = rb.column(i_lat).to_numpy(zero_copy_only=False)
-            probe_cells = qt.point_to_cell(lon, lat, depth)
-            order = np.argsort(probe_cells, kind="stable")
-            uc, starts = np.unique(probe_cells[order], return_index=True)
-            bounds = np.append(starts, len(order))
-            per_poly: dict[int, list[np.ndarray]] = {}
-            for k, c in enumerate(uc):
-                cand = idx.buckets.get(int(c))
-                if cand is None:
-                    continue
-                rows = order[bounds[k] : bounds[k + 1]]
-                for pi in cand.tolist():
-                    per_poly.setdefault(pi, []).append(rows)
-            hits_rows: list[np.ndarray] = []
-            hits_poly: list[int] = []
-            for pi, row_lists in per_poly.items():
-                rows = (
-                    row_lists[0]
-                    if len(row_lists) == 1
-                    else np.concatenate(row_lists)
-                )
-                inside = g.points_in_polygon(lon[rows], lat[rows], idx.rings[pi])
-                if inside.any():
-                    hits_rows.append(rows[inside])
-                    hits_poly.append(pi)
-            if not hits_rows:
-                continue
-            all_rows = np.concatenate(hits_rows)
-            all_pids = np.concatenate(
-                [
-                    np.full(len(r), idx.poly_ids[pi], dtype=np.int64)
-                    for r, pi in zip(hits_rows, hits_poly)
-                ]
-            )
-            taken = rb.take(pa.array(all_rows))
-            yield pa.RecordBatch.from_arrays(
-                list(taken.columns) + [pa.array(all_pids)],
-                names=taken.schema.names + ["poly_id"],
-            )
 
-    return points.mapInArrow(probe, out_schema)
+def pip_probe_batches(
+    batches,
+    index: PolygonIndex,
+    lon_col: str = "lon",
+    lat_col: str = "lat",
+) -> Iterator[pa.RecordBatch]:
+    """The per-batch kernel of :func:`pip_probe_arrow`: for each input
+    RecordBatch, yield its hit rows (all input columns) + ``tile`` +
+    ``poly_id``; a batch with no hit yields nothing."""
+    for rb in batches:
+        lon = np.asarray(rb.column(lon_col).to_numpy(zero_copy_only=False), np.float64)
+        lat = np.asarray(rb.column(lat_col).to_numpy(zero_copy_only=False), np.float64)
+        # NULL arrives as NaN; drop non-finite rows before the encode
+        ok = np.flatnonzero(np.isfinite(lon) & np.isfinite(lat))
+        lon, lat = lon[ok], lat[ok]
+        tile = qt.point_to_cell(lon, lat, qt.TILE_DEPTH)
+        probe_cells = qt.cell_parent(tile, index.depth)
+        # group candidate rows by polygon via the cell -> poly buckets
+        order = np.argsort(probe_cells, kind="stable")
+        uc, starts = np.unique(probe_cells[order], return_index=True)
+        bounds = np.append(starts, len(order))
+        per_poly: dict[int, list[np.ndarray]] = {}
+        for k, c in enumerate(uc.tolist()):
+            cand = index.buckets.get(c)
+            if cand is None:
+                continue
+            rows = order[bounds[k] : bounds[k + 1]]
+            for pi in cand.tolist():
+                per_poly.setdefault(pi, []).append(rows)
+        hits_rows: list[np.ndarray] = []
+        hits_pids: list[np.ndarray] = []
+        for pi, row_lists in per_poly.items():
+            rows = row_lists[0] if len(row_lists) == 1 else np.concatenate(row_lists)
+            inside = g.points_in_polygon(lon[rows], lat[rows], index.rings[pi])
+            if inside.any():
+                hits_rows.append(rows[inside])
+                hits_pids.append(np.full(inside.sum(), index.poly_ids[pi]))
+        if not hits_rows:
+            continue
+        rows = np.concatenate(hits_rows)
+        taken = rb.take(pa.array(ok[rows]))  # C++ gather, incl. strings
+        yield pa.RecordBatch.from_arrays(
+            list(taken.columns)
+            + [pa.array(tile[rows]), pa.array(np.concatenate(hits_pids))],
+            names=taken.schema.names + ["tile", "poly_id"],
+        )
 
 
 def bbox_overlay_join(

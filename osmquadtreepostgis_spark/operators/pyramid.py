@@ -8,9 +8,7 @@ metres (points exempt), re-key tiles at the level's depth.
 
 Spark shape: each level is a filtered projection of the SAME source
 DataFrame — Catalyst prunes and pushes the minzoom predicate to the
-scan; materialized levels are parquet writes clustered by tile
-(``repartitionByRange`` so file min/max statistics give partition
-pruning on tile ranges — the gist-index replacement, SURVEY.md §2.9 D4).
+scan.
 """
 
 from __future__ import annotations
@@ -21,15 +19,10 @@ from pyspark.sql import functions as F
 from ..functions.cells import cell_parent_col
 from ..functions.geometry import wkb_simplify_udf
 
-# (minzoom cutoff, simplify tolerance in mercator metres or None)
-DEFAULT_LEVELS = [(6, 612.0), (9, None), (11, None)]
-
 __all__ = [
     "lowzoom_level",
-    "build_pyramid",
     "rasterize_points",
     "vectorize_cells",
-    "DEFAULT_LEVELS",
 ]
 
 
@@ -230,24 +223,3 @@ SELECT {qt.sql_pack_xy('tx', 'ty', depth)} AS {cell_col},
        cast(v_sum AS double) / k_area AS v_smooth
 FROM __agg
 """
-
-
-def build_pyramid(
-    df: DataFrame,
-    levels: list[tuple[int, float | None]] | None = None,
-    out_dir: str | None = None,
-    **kw,
-) -> dict[int, DataFrame]:
-    """All levels; optionally materialized as tile-range-clustered
-    parquet (``{out_dir}/lz{K}``)."""
-    out = {}
-    for cutoff, tol in levels or DEFAULT_LEVELS:
-        lvl = lowzoom_level(df, cutoff, tol, **kw)
-        if out_dir:
-            (
-                lvl.repartitionByRange("lz_tile")
-                .write.mode("overwrite")
-                .parquet(f"{out_dir}/lz{cutoff}")
-            )
-        out[cutoff] = lvl
-    return out

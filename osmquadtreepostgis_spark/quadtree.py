@@ -43,12 +43,17 @@ DEPTH_BITS = 5
 _DEPTH_MASK = (1 << DEPTH_BITS) - 1
 MERC_MAX_LAT = 85.0511287798066
 EARTH_RADIUS = 6378137.0  # EPSG:3857 sphere radius (metres)
+# the engine's frozen key depths: object cells and the tile (block) key
+CELL_DEPTH = 18
+TILE_DEPTH = 8
 
 __all__ = [
     "MAX_DEPTH",
     "DEPTH_BITS",
     "MERC_MAX_LAT",
     "EARTH_RADIUS",
+    "CELL_DEPTH",
+    "TILE_DEPTH",
     "lonlat_to_unit",
     "unit_to_lonlat",
     "point_to_cell",

@@ -11,15 +11,11 @@ src/processpostgis.cpp:143). The Spark analog (SURVEY.md §2.1 S1/S2):
 * read with a cell-range / bbox predicate that Catalyst pushes to
   both layers.
 
-Iceberg would add snapshot isolation + hidden partitioning; its jars
-are absent here, so this is plain parquet with the same layout
-discipline (``use_iceberg`` flips to Iceberg writes when the runtime
-is present).
+Iceberg would add snapshot isolation + hidden partitioning; this is
+plain parquet with the same layout discipline.
 """
 
 from __future__ import annotations
-
-import importlib.util
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,19 +23,9 @@ from pyspark.sql import functions as F
 from .. import quadtree as qt
 from ..functions.cells import cell_tile_col
 
-__all__ = ["iceberg_available", "write_clustered", "read_cell_range", "read_bbox"]
+__all__ = ["write_clustered", "read_cell_range", "read_bbox"]
 
 PARTITION_DEPTH = 4  # 256 top-level dirs — coarse enough for 100 TB dirs
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
 
 
 def write_clustered(

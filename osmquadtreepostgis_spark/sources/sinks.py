@@ -24,7 +24,6 @@ __all__ = [
     "write_tables_csv_gz",
     "write_tables_copy_text",
     "write_tee",
-    "write_tables_jdbc",
     "hstore_literal",
     "copy_text_row",
     "write_jsonl_gz",
@@ -158,35 +157,6 @@ def write_tables_copy_text(
         )
         paths[t] = path
     return paths
-
-
-def write_tables_jdbc(
-    routed: DataFrame,
-    url: str,
-    table_prefix: str = "planet_osm_",
-    mode: str = "append",
-    properties: dict | None = None,
-    table_col: str = "table",
-) -> list[str]:
-    """Optional direct JDBC/PostGIS sink (S3). Parquet stays the
-    primary target; this exists for parity with the reference's named
-    capability — load into an actual PostGIS. Requires the PostgreSQL
-    JDBC driver on the Spark classpath (absent in this environment —
-    exercised only when a user supplies it). Map columns are packed as
-    hstore text literals so a ``text``/``hstore`` DDL accepts them."""
-    written = []
-    for t, df in _split_by_table(routed, table_col):
-        cols = []
-        for f in df.schema.fields:
-            c = F.col(f.name)
-            if f.dataType.typeName() == "map":
-                c = hstore_literal(c)
-            cols.append(c.alias(f.name))
-        df.select(cols).write.jdbc(
-            url, f"{table_prefix}{t}", mode=mode, properties=properties or {}
-        )
-        written.append(f"{table_prefix}{t}")
-    return written
 
 
 def write_tee(

@@ -59,8 +59,7 @@ def stream_pages_flagship(
     per-batch metrics hook.
     """
     from ..operators.mine import mine_coordinate_mentions
-    from ..operators.pip import PolygonIndex, encode_pip_tile
-    from ..plans.pipeline import CELL_DEPTH, TILE_DEPTH
+    from ..operators.pip import PolygonIndex, pip_probe_arrow
     from ..sources import fixtures
     from ..sources.pages import PAGES_SCHEMA
 
@@ -76,7 +75,7 @@ def stream_pages_flagship(
 
     def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
         mentions = mine_coordinate_mentions(batch_df)
-        hits = encode_pip_tile(mentions, index, CELL_DEPTH, TILE_DEPTH)
+        hits = pip_probe_arrow(mentions.select("lon", "lat"), index)
         (
             hits.groupBy("tile", "poly_id")
             .agg(F.count(F.lit(1)).alias("n_mentions"))

@@ -7,7 +7,7 @@ import pytest
 
 from osmquadtreepostgis_spark import quadtree as qt
 from osmquadtreepostgis_spark.operators.mine import mine_coordinate_mentions
-from osmquadtreepostgis_spark.operators.pip import PolygonIndex, encode_pip_tile
+from osmquadtreepostgis_spark.operators.pip import PolygonIndex, pip_probe_arrow
 from osmquadtreepostgis_spark.plans.pipeline import (
     CELL_DEPTH,
     TILE_DEPTH,
@@ -50,11 +50,11 @@ def test_text_byte_identical_invariant(spark):
     stage byte-identically (keyed by url)."""
     p = pages(spark, 500, partitions=2)
     idx = PolygonIndex.from_polygons_df(fixtures.polygons_df(spark), depth=6)
-    # run text THROUGH the fused hot path and compare bytes per url
+    # run text THROUGH the broadcast PIP kernel and compare bytes per url
     m = mine_coordinate_mentions(p.select("url", "text")).join(
         p.select("url", "text"), "url"
     )
-    hits = encode_pip_tile(m, idx, CELL_DEPTH, TILE_DEPTH)
+    hits = pip_probe_arrow(m, idx)
     out = hits.select("url", "text").distinct().toPandas()
     src = synthesize_pdf(np.arange(500)).set_index("url")["text"]
     for url, text in out.itertuples(index=False):

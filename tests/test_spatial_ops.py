@@ -1,13 +1,18 @@
 """Spatial operator property tests: PIP joins vs brute force (incl.
-concave/holed polygons), grid kNN vs exact, IVF ANN recall,
-pip_join_broadcast == pip_join_shuffle."""
+concave/holed polygons, and the broadcast kernel run locally on
+pyarrow batches), grid kNN vs exact, IVF ANN recall,
+pip_probe_arrow == pip_join_shuffle."""
+
+import warnings
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from osmquadtreepostgis_spark import geom as g
+from osmquadtreepostgis_spark import quadtree as qt
 from osmquadtreepostgis_spark.operators.knn import (
     ann_cosine_ivf,
     ann_cosine_topk,
@@ -16,8 +21,9 @@ from osmquadtreepostgis_spark.operators.knn import (
 )
 from osmquadtreepostgis_spark.operators.pip import (
     PolygonIndex,
-    pip_join_broadcast,
     pip_join_shuffle,
+    pip_probe_arrow,
+    pip_probe_batches,
 )
 from osmquadtreepostgis_spark.sources import fixtures
 
@@ -45,17 +51,8 @@ def _brute_force_hits(points_pdf, polys):
     return sorted(rows)
 
 
-def test_pip_broadcast_matches_brute_force_complex(spark, points_pdf):
-    """Concave + holed polygons — not oracle-expressible, pinned here."""
-    polys_df = fixtures.polygons_df(spark, include_complex=True)
-    idx = PolygonIndex.from_polygons_df(polys_df, depth=6)
-    got = sorted(
-        (int(r["pt_id"]), int(r["poly_id"]))
-        for r in pip_join_broadcast(spark.createDataFrame(points_pdf), idx)
-        .select("pt_id", "poly_id")
-        .collect()
-    )
-    # brute force over the same polygon set (rings in lon/lat)
+def _complex_polys():
+    """The include_complex polygon layer as lon/lat rings."""
     polys = []
     for rec in fixtures.box_records():
         ring = np.array(
@@ -67,9 +64,24 @@ def test_pip_broadcast_matches_brute_force_complex(spark, points_pdf):
             ]
         )
         polys.append({"poly_id": rec["poly_id"], "rings": [ring]})
-    polys += fixtures.complex_polygons()
-    want = _brute_force_hits(points_pdf, polys)
-    assert got == want
+    return polys + fixtures.complex_polygons()
+
+
+@pytest.fixture(scope="module")
+def complex_index(spark):
+    polys_df = fixtures.polygons_df(spark, include_complex=True)
+    return PolygonIndex.from_polygons_df(polys_df, depth=6)
+
+
+def test_pip_broadcast_matches_brute_force_complex(spark, points_pdf, complex_index):
+    """Concave + holed polygons — not oracle-expressible, pinned here."""
+    got = sorted(
+        (int(r["pt_id"]), int(r["poly_id"]))
+        for r in pip_probe_arrow(spark.createDataFrame(points_pdf), complex_index)
+        .select("pt_id", "poly_id")
+        .collect()
+    )
+    assert got == _brute_force_hits(points_pdf, _complex_polys())
 
 
 def test_pip_shuffle_equals_broadcast(spark, points_pdf):
@@ -78,7 +90,7 @@ def test_pip_shuffle_equals_broadcast(spark, points_pdf):
     pts = spark.createDataFrame(points_pdf)
     a = sorted(
         (int(r["pt_id"]), int(r["poly_id"]))
-        for r in pip_join_broadcast(pts, idx).select("pt_id", "poly_id").collect()
+        for r in pip_probe_arrow(pts, idx).select("pt_id", "poly_id").collect()
     )
     b = sorted(
         (int(r["pt_id"]), int(r["poly_id"]))
@@ -87,6 +99,89 @@ def test_pip_shuffle_equals_broadcast(spark, points_pdf):
         .collect()
     )
     assert a == b
+
+
+# --- the broadcast kernel, run locally on pyarrow batches -------------
+
+
+def _probe_local(index, pdf, batch_rows=512):
+    """Run the mapInArrow kernel on local batches; hits as pandas."""
+    batches = pa.Table.from_pandas(pdf, preserve_index=False).to_batches(batch_rows)
+    return pa.Table.from_batches(list(pip_probe_batches(batches, index))).to_pandas()
+
+
+def _pairs(df):
+    return sorted(zip(df["pt_id"].tolist(), df["poly_id"].tolist()))
+
+
+def test_pip_kernel_local_matches_brute_force(points_pdf, complex_index):
+    got = _probe_local(complex_index, points_pdf)
+    assert _pairs(got) == _brute_force_hits(points_pdf, _complex_polys())
+    # the emitted tile is the depth-18 cell's ancestor at TILE_DEPTH
+    deep = qt.point_to_cell(got["lon"].to_numpy(), got["lat"].to_numpy(), qt.CELL_DEPTH)
+    np.testing.assert_array_equal(
+        got["tile"].to_numpy(), qt.cell_parent(deep, qt.TILE_DEPTH)
+    )
+
+
+def test_pip_kernel_batch_without_hits_yields_nothing(complex_index):
+    # north of every polygon (the grid boxes stop at lat 84)
+    pdf = pd.DataFrame(
+        {"pt_id": np.arange(50), "lon": np.linspace(-170, 170, 50), "lat": 84.5}
+    )
+    rb = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
+    assert list(pip_probe_batches([rb], complex_index)) == []
+
+
+def test_pip_kernel_overlapping_polygons_one_row_each(complex_index):
+    """A point in a hotspot box is also in a grid box: one row per
+    containing polygon."""
+    hot = next(r for r in fixtures.box_records() if r["kind"] == "hotspot")
+    pdf = pd.DataFrame(
+        {"pt_id": [0], "lon": [hot["xmin"] + 3.0], "lat": [hot["ymin"] + 3.0]}
+    )
+    got = _pairs(_probe_local(complex_index, pdf))
+    assert got == _brute_force_hits(pdf, _complex_polys())
+    assert len(got) >= 2 and (0, hot["poly_id"]) in got
+
+
+def test_pip_kernel_string_column_byte_identical(points_pdf, complex_index):
+    pdf = points_pdf.assign(
+        text=[f"pt {i} \u00e9\u4e2d\t\\ \U0001f30d" for i in points_pdf["pt_id"]]
+    )
+    got = _probe_local(complex_index, pdf)
+    assert len(got) > 0
+    src = pdf.set_index("pt_id")["text"]
+    for pid, text in zip(got["pt_id"], got["text"]):
+        assert text.encode() == src.loc[pid].encode()
+
+
+def test_pip_kernel_drops_null_and_nan_coordinates(complex_index):
+    lon = pa.array([None, np.nan, 10.0, 10.0, np.inf], pa.float64())
+    lat = pa.array([10.0, 10.0, np.nan, 10.0, 10.0], pa.float64())
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(np.arange(5)), lon, lat], names=["pt_id", "lon", "lat"]
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = pa.Table.from_batches(list(pip_probe_batches([rb], complex_index)))
+    assert len(out) > 0
+    assert set(out.column("pt_id").to_pylist()) == {3}
+
+
+def test_polygon_index_rejects_depth_deeper_than_tile():
+    ring = np.array([[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0]])
+    poly = {
+        "poly_id": 1,
+        "rings": [ring],
+        "xmin": 0.0,
+        "ymin": 0.0,
+        "xmax": 1.0,
+        "ymax": 1.0,
+    }
+    assert PolygonIndex([poly], depth=qt.TILE_DEPTH).depth == qt.TILE_DEPTH
+    with pytest.raises(ValueError, match="TILE_DEPTH"):
+        PolygonIndex([poly], depth=qt.TILE_DEPTH + 1)
 
 
 def test_knn_grid_equals_exact_when_radius_bounded(spark):
