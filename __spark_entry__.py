@@ -28,11 +28,7 @@ from osmquadtreepostgis_spark.operators import knn as KNN
 from osmquadtreepostgis_spark.operators import routing as RT
 from osmquadtreepostgis_spark.operators import tfidf as TFIDF
 from osmquadtreepostgis_spark.operators.mine import mine_gazetteer_terms
-from osmquadtreepostgis_spark.operators.pip import (
-    PolygonIndex,
-    pip_join_shuffle,
-    pip_probe_arrow,
-)
+from osmquadtreepostgis_spark.operators.pip import pip_join_shuffle, pip_probe_arrow
 from osmquadtreepostgis_spark.plans import elements as EL
 from osmquadtreepostgis_spark.plans.pipeline import (
     CELL_DEPTH,
@@ -40,6 +36,7 @@ from osmquadtreepostgis_spark.plans.pipeline import (
     doc_coords,
     documents_pipeline,
     fanout_small_scan,
+    fixture_polygon_index,
     load_table,
     sql_doc_coords,
 )
@@ -149,8 +146,7 @@ def q_tile_agg(spark, sf):
 
 def q_pip_points_in_boxes(spark, sf):
     d = doc_coords(_docs(spark, sf).select("doc_id"))
-    idx = PolygonIndex.from_polygons_df(fixtures.polygons_df(spark), depth=6)
-    return pip_probe_arrow(d, idx).select("doc_id", "poly_id")
+    return pip_probe_arrow(d, fixture_polygon_index()).select("doc_id", "poly_id")
 
 
 def q_pip_shuffle_cover(spark, sf):

@@ -118,8 +118,14 @@ class CheckpointedWriter:
         if not counts:
             b.unpersist()
             return {"written_buckets": 0, "skipped_buckets": len(done), "rows": 0}
+        # one wave of write tasks: AQE sizes a bare repartition("__bucket")
+        # by bytes and coalesces it into ONE task that writes every bucket
+        # file in turn (4 vCPUs, 70 rows into 64 bucket dirs: 1 task
+        # 696 ms, 4 tasks 387 ms, 64 tasks 1091 ms); hashing on __bucket
+        # still sends each bucket to one task, so one file per bucket
+        n_tasks = min(len(counts), spark.sparkContext.defaultParallelism)
         (
-            b.repartition("__bucket")
+            b.repartition(n_tasks, "__bucket")
             .write.mode("overwrite")
             # per-write dynamic overwrite (replace only touched buckets);
             # scoped here so the session-wide overwrite semantics of

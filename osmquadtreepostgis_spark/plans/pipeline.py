@@ -18,6 +18,8 @@ Scale notes (the 100 TB plan):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,6 +33,7 @@ __all__ = [
     "sql_doc_coords",
     "load_table",
     "fanout_small_scan",
+    "fixture_polygon_index",
     "documents_pipeline",
     "pages_pipeline",
     "run_pages_checkpointed",
@@ -64,6 +67,15 @@ def fanout_small_scan(df: DataFrame, min_partitions: int | None = None) -> DataF
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+@functools.cache
+def fixture_polygon_index() -> PolygonIndex:
+    """The fixture polygon layer's depth-6 index, built once per process
+    from the fixture rows' WKB (no DataFrame round trip) and shared by
+    every flagship plan, so its broadcast is made once per
+    SparkContext too."""
+    return PolygonIndex.from_rows(fixtures.polygon_rows(), depth=6)
 
 
 def doc_coords(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -105,8 +117,7 @@ def documents_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_mentions"),
         F.sum("n_occurrences").alias("n_occurrences"),
     )
-    index = PolygonIndex.from_polygons_df(fixtures.polygons_df(spark), depth=6)
-    hits = pip_probe_arrow(mentions, index)
+    hits = pip_probe_arrow(mentions, fixture_polygon_index())
     return (
         hits.groupBy("tile", "poly_id")
         .agg(
@@ -145,8 +156,6 @@ def pages_pipeline(pages: DataFrame) -> DataFrame:
     tile key), tile-aggregates. The per-row invariant: ``text`` is only
     read.
     """
-    spark = pages.sparkSession
-    index = PolygonIndex.from_polygons_df(fixtures.polygons_df(spark), depth=6)
     mentions = mine_coordinate_mentions(pages)
     # pre-hash url AND entity JVM-side BEFORE the fused Python stage:
     # the downstream aggregate only needs them for
@@ -168,7 +177,7 @@ def pages_pipeline(pages: DataFrame) -> DataFrame:
     # expression costs every plan: measured on 4 vCPUs over 2k pages,
     # +6-8 ms planning and +15-50 ms wall per job, which a stream pays
     # again on every micro-batch
-    hits = pip_probe_arrow(mentions, index)
+    hits = pip_probe_arrow(mentions, fixture_polygon_index())
     # approx_count_distinct (HLL): map-side-combinable sketch state —
     # exact countDistinct over billions of hit rows would expand the
     # aggregate state to the full url set per (tile, poly) and

@@ -27,7 +27,13 @@ from .. import geom as g
 from .. import quadtree as qt
 from .gazetteer import CITY_GAZETTEER
 
-__all__ = ["box_records", "complex_polygons", "polygons_df", "sql_box_values"]
+__all__ = [
+    "box_records",
+    "complex_polygons",
+    "polygon_rows",
+    "polygons_df",
+    "sql_box_values",
+]
 
 
 def box_records() -> list[dict]:
@@ -125,6 +131,13 @@ def polygons_df(
     spark: SparkSession, include_complex: bool = False, tile_depth: int = 6
 ) -> DataFrame:
     """The polygon layer as a DataFrame with reference row shape."""
+    pdf = pd.DataFrame(polygon_rows(include_complex, tile_depth))
+    return spark.createDataFrame(pdf, schema=_POLY_SCHEMA)
+
+
+def polygon_rows(include_complex: bool = False, tile_depth: int = 6) -> list[dict]:
+    """The rows of :func:`polygons_df`, built on the driver without
+    Spark."""
     rows = []
     for r in box_records():
         ring_ll = np.array(
@@ -149,8 +162,7 @@ def polygons_df(
                 "admin_level": 2,
             }
             rows.append(_poly_row(rec, r["rings"], tile_depth))
-    pdf = pd.DataFrame(rows)
-    return spark.createDataFrame(pdf, schema=_POLY_SCHEMA)
+    return rows
 
 
 def _poly_row(rec: dict, rings_lonlat: list[np.ndarray], tile_depth: int) -> dict:

@@ -59,11 +59,11 @@ def stream_pages_flagship(
     per-batch metrics hook.
     """
     from ..operators.mine import mine_coordinate_mentions
-    from ..operators.pip import PolygonIndex, pip_probe_arrow
-    from ..sources import fixtures
+    from ..operators.pip import pip_probe_arrow
+    from ..plans.pipeline import fixture_polygon_index
     from ..sources.pages import PAGES_SCHEMA
 
-    index = PolygonIndex.from_polygons_df(fixtures.polygons_df(spark), depth=6)
+    index = fixture_polygon_index()
     data_dir = f"{out_dir.rstrip('/')}/partials"
     ckpt_dir = f"{out_dir.rstrip('/')}/_stream_checkpoint"
 

@@ -58,6 +58,19 @@ def test_rewrite_is_idempotent_not_duplicating(spark, out_dir):
     assert w.read(spark).count() == 1000
 
 
+def test_each_bucket_written_as_one_file(spark, out_dir):
+    """The bucket write runs as several tasks, but hashing on the
+    bucket key sends each bucket to exactly one of them."""
+    from pathlib import Path
+
+    w = CheckpointedWriter(out_dir, n_buckets=64)
+    assert w.write(_mk(spark).repartition(8))["written_buckets"] == 64
+    dirs = sorted(Path(w.data_dir).glob("__bucket=*"))
+    assert len(dirs) == 64
+    for d in dirs:
+        assert len(list(d.glob("*.parquet"))) == 1, d.name
+
+
 def test_flagship_checkpointed_resume(spark, tmp_path):
     """End-to-end resumable flagship: partial run -> resume -> output
     equals the direct pipeline result."""

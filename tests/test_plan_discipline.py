@@ -6,7 +6,10 @@ Invariants the 100 TB posture depends on:
   allowed only through Arrow (ArrowEvalPython / MapInArrow /
   FlatMap*Pandas*);
 * no unbroadcast cartesian product (CartesianProduct) — deliberate
-  small-side cross joins must plan as BroadcastNestedLoopJoin.
+  small-side cross joins must plan as BroadcastNestedLoopJoin;
+* the flagship plans run exactly one Python stage, the PIP probe:
+  every Python stage pays pyspark's per-task import-cache flush again
+  on each worker's first task.
 """
 
 import pytest
@@ -55,3 +58,35 @@ def test_no_window_over_content_key(name, spark):
         assert "__s#" not in part and not re.search(r"\bg#\d", part), (
             f"{name}: Window partitioned by raw content key: {part[:200]}"
         )
+
+
+def _python_nodes(plan):
+    """Class names of the Python-evaluation nodes of a physical plan."""
+    found, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getName()
+        if name.endswith(".AdaptiveSparkPlanExec"):
+            stack.append(node.executedPlan())
+            continue
+        if name.startswith("org.apache.spark.sql.execution.python."):
+            found.append(name.rsplit(".", 1)[1])
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+def test_flagship_plans_have_one_python_stage(spark):
+    import numpy as np
+
+    from osmquadtreepostgis_spark.plans.pipeline import pages_pipeline
+    from osmquadtreepostgis_spark.sources.pages import PAGES_SCHEMA, synthesize_pdf
+
+    pages = spark.createDataFrame(synthesize_pdf(np.arange(200)), PAGES_SCHEMA)
+    plans = {
+        "flagship_tiles": entrymod.queries()["flagship_tiles"](spark, SF_DIR),
+        "pages_pipeline": pages_pipeline(pages),
+    }
+    for name, df in plans.items():
+        nodes = _python_nodes(df._jdf.queryExecution().executedPlan())
+        assert nodes == ["MapInArrowExec"], f"{name}: Python stages {nodes}"

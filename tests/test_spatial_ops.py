@@ -3,7 +3,11 @@ concave/holed polygons, and the broadcast kernel run locally on
 pyarrow batches), grid kNN vs exact, IVF ANN recall,
 pip_probe_arrow == pip_join_shuffle."""
 
+import os
+import sys
 import warnings
+import zipfile
+import zipimport
 
 import numpy as np
 import pandas as pd
@@ -182,6 +186,73 @@ def test_polygon_index_rejects_depth_deeper_than_tile():
     assert PolygonIndex([poly], depth=qt.TILE_DEPTH).depth == qt.TILE_DEPTH
     with pytest.raises(ValueError, match="TILE_DEPTH"):
         PolygonIndex([poly], depth=qt.TILE_DEPTH + 1)
+
+
+def _zip_finders():
+    return [
+        p
+        for p, f in sys.path_importer_cache.items()
+        if isinstance(f, zipimport.zipimporter)
+    ]
+
+
+def test_pip_kernel_evicts_zip_finders(tmp_path, monkeypatch, points_pdf):
+    """The kernel leaves no zipimporter cached, whether its batches run
+    out or the consumer closes it early; modules from the same archive
+    still import afterwards. No Spark: index and batches are local."""
+    index = PolygonIndex.from_rows(fixtures.polygon_rows(include_complex=True))
+    archive = str(tmp_path / "zmods.zip")
+    names = [f"oqps_zip_probe_{k}" for k in "abc"]
+    with zipfile.ZipFile(archive, "w") as zf:
+        for k, name in enumerate(names):
+            zf.writestr(f"{name}.py", f"VALUE = {k}\n")
+    monkeypatch.syspath_prepend(archive)
+    batches = pa.Table.from_pandas(points_pdf, preserve_index=False).to_batches(512)
+    try:
+        assert __import__(names[0]).VALUE == 0
+        assert archive in _zip_finders()
+        assert len(list(pip_probe_batches(batches, index))) > 1
+        assert _zip_finders() == []
+        assert __import__(names[1]).VALUE == 1
+        assert archive in _zip_finders()
+        probe = pip_probe_batches(batches, index)
+        next(probe)
+        assert archive in _zip_finders()
+        probe.close()
+        assert _zip_finders() == []
+        assert __import__(names[2]).VALUE == 2
+    finally:
+        for name in names:
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(archive, None)
+
+
+def _index_arrays(index):
+    return (
+        index.depth,
+        index.poly_ids.tolist(),
+        {c: v.tolist() for c, v in index.buckets.items()},
+        [[ring.tolist() for ring in rings] for rings in index.rings],
+    )
+
+
+def test_fixture_index_equals_dataframe_built_index(spark):
+    from osmquadtreepostgis_spark.plans.pipeline import fixture_polygon_index
+
+    want = PolygonIndex.from_polygons_df(fixtures.polygons_df(spark), depth=6)
+    assert fixture_polygon_index() is fixture_polygon_index()
+    assert _index_arrays(fixture_polygon_index()) == _index_arrays(want)
+
+
+def test_index_broadcast_once_per_context(spark, points_pdf):
+    """Repeated probes with one index share one broadcast file."""
+    sc = spark.sparkContext
+    idx = PolygonIndex.from_rows(fixtures.polygon_rows(include_complex=True))
+    pts = spark.createDataFrame(points_pdf)
+    before = set(os.listdir(sc._temp_dir))
+    counts = [pip_probe_arrow(pts, idx).count() for _ in range(3)]
+    assert len(set(os.listdir(sc._temp_dir)) - before) == 1
+    assert counts[0] > 0 and len(set(counts)) == 1
 
 
 def test_knn_grid_equals_exact_when_radius_bounded(spark):
