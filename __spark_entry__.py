@@ -35,7 +35,6 @@ from osmquadtreepostgis_spark.plans.pipeline import (
     TILE_DEPTH,
     doc_coords,
     documents_pipeline,
-    fanout_small_scan,
     fixture_polygon_index,
     load_table,
     sql_doc_coords,
@@ -81,15 +80,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # spark queries
 
 
-def _docs(spark, sf, fanout: bool = True):
-    # single-row-group scans serialize all fused per-row work onto one
-    # task; fan out up to the session's parallelism (no-op at scale —
-    # see plans.pipeline.fanout_small_scan). Queries whose per-doc work
-    # is coordinate math or a single hash pass fanout=False: for them
-    # the added round-robin exchange costs a stage (~0.3 s) and buys
-    # nothing at any plausible scale factor.
-    df = load_table(spark, sf, "documents")
-    return fanout_small_scan(df) if fanout else df
+def _docs(spark, sf):
+    return load_table(spark, sf, "documents")
 
 
 def _utc(spark):
@@ -100,7 +92,7 @@ def _utc(spark):
 
 
 def q_cell_encode(spark, sf):
-    d = doc_coords(_docs(spark, sf, fanout=False).select("doc_id"))
+    d = doc_coords(_docs(spark, sf).select("doc_id"))
     return d.withColumn("cell", cell_encode_udf(CELL_DEPTH)("lon", "lat")).withColumn(
         "tile", cell_parent_col("cell", TILE_DEPTH)
     )
@@ -114,7 +106,7 @@ def q_sql_surface_cells(spark, sf):
     from osmquadtreepostgis_spark.plans.sql_surface import register_sql_functions
 
     register_sql_functions(spark)
-    d = doc_coords(_docs(spark, sf, fanout=False).select("doc_id"))
+    d = doc_coords(_docs(spark, sf).select("doc_id"))
     d.createOrReplaceTempView("__sqlsurf_docs")
     # compute the encode ONCE in a subquery: each st_point_to_cell call
     # inlines a large expression tree (trig + magic-mask spread), and
@@ -133,7 +125,7 @@ def q_sql_surface_cells(spark, sf):
 
 
 def q_tile_agg(spark, sf):
-    d = doc_coords(_docs(spark, sf, fanout=False).select("doc_id", "n_chars"))
+    d = doc_coords(_docs(spark, sf).select("doc_id", "n_chars"))
     enc = d.withColumn("cell", cell_encode_udf(CELL_DEPTH)("lon", "lat")).withColumn(
         "tile", cell_parent_col("cell", TILE_DEPTH)
     )
@@ -193,7 +185,7 @@ def q_knn_grid(spark, sf):
 
 
 def q_routing_extended(spark, sf):
-    el = EL.elements_df(_docs(spark, sf, fanout=False))
+    el = EL.elements_df(_docs(spark, sf))
     z = RT.z_order_col(F.col("tags"))
     routed = RT.explode_routes(
         el.withColumn("z_order", z).withColumn(
@@ -253,7 +245,7 @@ def q_style_spec_routing(spark, sf):
 
 
 def q_zorder_minzoom(spark, sf):
-    el = EL.elements_df(_docs(spark, sf, fanout=False))
+    el = EL.elements_df(_docs(spark, sf))
     return el.select(
         "osm_id",
         RT.z_order_col(F.col("tags")).alias("z_order"),
@@ -275,7 +267,7 @@ def q_raster_vectorize(spark, sf):
         vectorize_cells,
     )
 
-    d = doc_coords(_docs(spark, sf, fanout=False).select("doc_id"))
+    d = doc_coords(_docs(spark, sf).select("doc_id"))
     # depth 4 (256 cells) keeps the thresholded result NON-VACUOUS at
     # every SF (hash-uniform coords: ~2 docs/cell at sf0.01 -> ~90
     # cells pass min_count=3; depth 6 yielded 0 rows = a vacuous check)
@@ -286,7 +278,7 @@ def q_raster_vectorize(spark, sf):
 
 
 def q_pyramid_counts(spark, sf):
-    d = doc_coords(_docs(spark, sf, fanout=False).select("doc_id"))
+    d = doc_coords(_docs(spark, sf).select("doc_id"))
     enc = d.withColumn("cell", cell_encode_udf(CELL_DEPTH)("lon", "lat"))
     out = None
     for depth in (6, 9, 11):
@@ -447,7 +439,7 @@ def q_stream_events_window(spark, sf):
 
 
 def q_dedup_exact(spark, sf):
-    return DD.dedup_exact(_docs(spark, sf, fanout=False))
+    return DD.dedup_exact(_docs(spark, sf))
 
 
 def q_stream_dedup_exact(spark, sf):
@@ -541,37 +533,10 @@ def q_image_near_dup(spark, sf):
 
 
 def q_corpus_stats(spark, sf):
-    """Dataset-card corpus report: doc/token counts, exact token-count
-    percentiles (p50/p90/p99), mean quality score, and per-language doc
-    counts — one row per detected language with the global stats
-    repeated (keeps the result a flat oracle-friendly table). All
-    inputs are the existing JVM text functions; percentile is Spark's
-    exact interpolated percentile, the same definition as DuckDB's
-    quantile_cont."""
-    d = _docs(spark, sf).select(
-        TX.token_count("text").alias("ntok"),
-        TX.lang_id("text").alias("lang"),
-        TX.quality_score("text").alias("q"),
-    )
-    g = d.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("ntok").alias("total_tokens"),
-        F.expr("percentile(ntok, 0.5)").alias("p50_tokens"),
-        F.expr("percentile(ntok, 0.9)").alias("p90_tokens"),
-        F.expr("percentile(ntok, 0.99)").alias("p99_tokens"),
-        F.round(F.avg("q"), 4).alias("mean_quality"),
-    )
-    per_lang = d.groupBy("lang").agg(F.count(F.lit(1)).alias("lang_docs"))
-    return per_lang.crossJoin(F.broadcast(g)).select(
-        "lang",
-        "lang_docs",
-        "n_docs",
-        "total_tokens",
-        "p50_tokens",
-        "p90_tokens",
-        "p99_tokens",
-        "mean_quality",
-    )
+    """Dataset-card corpus report (operators/corpus.py)."""
+    from osmquadtreepostgis_spark.operators.corpus import corpus_stats
+
+    return corpus_stats(_docs(spark, sf))
 
 
 def q_curate_corpus(spark, sf):
@@ -953,12 +918,12 @@ def q_embed_cosine_pairs(spark, sf):
     checked result non-empty at every SF (59 pairs at sf0.01, 920 at
     sf0.1) with >= 1e-4 margin to the nearest pair, so cross-engine fp
     jitter cannot flip a row."""
-    emb = fanout_small_scan(load_table(spark, sf, "embeddings"))
+    emb = load_table(spark, sf, "embeddings")
     return KNN.ann_cosine_pairs_grid(emb, threshold=0.4, block_rows=2048)
 
 
 def q_embed_topk(spark, sf):
-    emb = fanout_small_scan(load_table(spark, sf, "embeddings"))
+    emb = load_table(spark, sf, "embeddings")
     q = (
         emb.filter(F.col("vec_id") < 5)
         .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
@@ -981,7 +946,7 @@ def q_embed_quantize(spark, sf):
         quantize_scale_micro,
     )
 
-    emb = fanout_small_scan(load_table(spark, sf, "embeddings"))
+    emb = load_table(spark, sf, "embeddings")
     q = quantize_embedding_int8("embedding")
     zero = F.lit(0).cast("long")
     return emb.select(
@@ -1023,7 +988,7 @@ def q_knn_label_eval(spark, sf):
     per query: predicted vs true label. The vote is pure counting, so
     the only fp surface is the top-k ordering embed_topk already
     pins."""
-    emb = fanout_small_scan(load_table(spark, sf, "embeddings"))
+    emb = load_table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") < 50).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
@@ -1058,7 +1023,7 @@ def q_embed_topk_ivf(spark, sf):
     so the brute-force oracle is the true answer (recall 1.0 by
     construction, not by measurement). VERDICT r2 next-round #3; the
     approximate configs' recall stays pytest-pinned."""
-    emb = fanout_small_scan(load_table(spark, sf, "embeddings"))
+    emb = load_table(spark, sf, "embeddings")
     q = (
         emb.filter(F.col("vec_id") < 5)
         .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
@@ -1138,12 +1103,10 @@ def q_diverse_sample(spark, sf):
     skew-safe per-key cap (corpus.cap_per_key, n=2 per bucket). No
     neighborhood over-contributes: near-duplicate embeddings share a
     bucket, so at most 2 survive per cosine region."""
-    from osmquadtreepostgis_spark.functions.embed import hyperplane_bucket
+    from osmquadtreepostgis_spark.functions.embed import hyperplane_buckets_frame
     from osmquadtreepostgis_spark.operators.corpus import cap_per_key
 
-    emb = fanout_small_scan(spark.read.parquet(f"{sf}/embeddings.parquet")).select(
-        "vec_id", hyperplane_bucket("embedding").alias("bucket")
-    )
+    emb = hyperplane_buckets_frame(load_table(spark, sf, "embeddings"))
     return cap_per_key(
         emb, "bucket", [F.col("vec_id").alias("i")], n=2
     ).select("vec_id", "bucket", F.col("rank").cast("long").alias("rank"))
@@ -1238,7 +1201,7 @@ def q_multimodal_meta(spark, sf):
     import pandas as pd
     from pyspark.sql import types as T
 
-    d = _docs(spark, sf, fanout=False).select("doc_id", "text", "n_chars")
+    d = _docs(spark, sf).select("doc_id", "text", "n_chars")
 
     def decode(batches):
         for pdf in batches:
@@ -1271,7 +1234,7 @@ def q_multimodal_frames(spark, sf):
     oracle byte-exact via substr."""
     from osmquadtreepostgis_spark.functions.multimodal import sample_frames
 
-    d = _docs(spark, sf, fanout=False).select(
+    d = _docs(spark, sf).select(
         "doc_id", F.encode("text", "utf-8").alias("payload")
     )
     frames = sample_frames(d, frame_bytes=64, every=4)
@@ -1298,7 +1261,7 @@ def q_way_assembly(spark, sf):
     from osmquadtreepostgis_spark.operators.assembly import assemble_ways
     from osmquadtreepostgis_spark.plans.elements import ways_df
 
-    docs = _docs(spark, sf, fanout=False)
+    docs = _docs(spark, sf)
     nodes = doc_coords(docs.select("doc_id")).select(
         F.col("doc_id").alias("node_id"), "lon", "lat"
     )
@@ -1311,7 +1274,7 @@ def q_parent_tags(spark, sf):
     from osmquadtreepostgis_spark.operators.assembly import propagate_parent_tags
     from osmquadtreepostgis_spark.plans.elements import ways_df
 
-    docs = _docs(spark, sf, fanout=False)
+    docs = _docs(spark, sf)
     nodes = doc_coords(docs.select("doc_id")).select(
         F.col("doc_id").alias("node_id"), "lon", "lat"
     )
@@ -1367,7 +1330,7 @@ def q_geom_measures(spark, sf):
         wkb_is_valid_udf,
     )
 
-    d = doc_coords(_docs(spark, sf, fanout=False).select("doc_id"))
+    d = doc_coords(_docs(spark, sf).select("doc_id"))
     d = d.withColumn("lat", F.least(F.col("lat"), F.lit(84.5)))
     way = bbox_to_wkb_udf(round_2dp=True)(
         F.col("lon"), F.col("lat"), F.col("lon") + 0.5, F.col("lat") + 0.25
@@ -1420,7 +1383,7 @@ def q_salted_tile_agg(spark, sf):
     plain tile aggregate (shares its oracle arithmetic)."""
     from osmquadtreepostgis_spark.operators.skew import salted_agg
 
-    d = doc_coords(_docs(spark, sf, fanout=False).select("doc_id", "n_chars"))
+    d = doc_coords(_docs(spark, sf).select("doc_id", "n_chars"))
     enc = d.withColumn("cell", cell_encode_udf(CELL_DEPTH)("lon", "lat")).withColumn(
         "tile", cell_parent_col("cell", TILE_DEPTH)
     )
@@ -1439,7 +1402,7 @@ def q_multipolygon_parts(spark, sf):
     expressible: rows-only driver check; pinned by pytest)."""
     from osmquadtreepostgis_spark.operators.assembly import assemble_multipolygons
 
-    d = doc_coords(_docs(spark, sf, fanout=False).select("doc_id")).filter(
+    d = doc_coords(_docs(spark, sf).select("doc_id")).filter(
         F.col("doc_id") % 7 == 0
     )
     d = d.withColumn("lat", F.least(F.col("lat"), F.lit(84.0)))
@@ -1485,7 +1448,7 @@ def q_multipolygon_chain(spark, sf):
     """
     from osmquadtreepostgis_spark.operators.assembly import assemble_multipolygons
 
-    d = doc_coords(_docs(spark, sf, fanout=False).select("doc_id")).filter(
+    d = doc_coords(_docs(spark, sf).select("doc_id")).filter(
         F.col("doc_id") % 11 == 3
     )
     d = d.withColumn("lat", F.least(F.col("lat"), F.lit(84.0)))
@@ -1596,7 +1559,7 @@ def q_geohash_encode(spark, sf):
     projection only — no shuffle, no UDF."""
     from osmquadtreepostgis_spark.functions.geohash import with_geohash
 
-    d = doc_coords(_docs(spark, sf, fanout=False).select("doc_id"))
+    d = doc_coords(_docs(spark, sf).select("doc_id"))
     g = with_geohash(d, "lon", "lat", 8)
     return g.select(
         "doc_id",
@@ -1668,7 +1631,7 @@ def q_url_blocklist(spark, sf):
     back with blocked_domain / blocked_path / kept flags."""
     from osmquadtreepostgis_spark.operators.blocklist import audit_blocklist
 
-    d = _docs(spark, sf, fanout=False).select("doc_id").withColumn("url", _blocklist_url())
+    d = _docs(spark, sf).select("doc_id").withColumn("url", _blocklist_url())
     rules = (
         spark.range(37)
         .filter(F.col("id") % 4 == 0)
@@ -1696,7 +1659,7 @@ def q_tile_clip(spark, sf):
     the per-tile write repartition is the caller's only exchange."""
     from osmquadtreepostgis_spark.operators.clip import clip_segments_to_tiles
 
-    d = doc_coords(_docs(spark, sf, fanout=False).select("doc_id"))
+    d = doc_coords(_docs(spark, sf).select("doc_id"))
     segs = d.select(
         F.col("doc_id").alias("seg_id"),
         F.col("lon").alias("x1"),
@@ -1728,7 +1691,7 @@ def q_linkrank(spark, sf):
     page with dangling targets dropped by the membership semi-join."""
     from osmquadtreepostgis_spark.operators.linkrank import linkrank
 
-    d = _docs(spark, sf, fanout=False).select("doc_id")
+    d = _docs(spark, sf).select("doc_id")
     links = (
         d.select(
             F.col("doc_id").alias("src"),
@@ -1792,7 +1755,7 @@ def q_recrawl_latest(spark, sf):
     hash groupBy with map-side-combinable arg-max state — no window,
     no sort; ties impossible because the synthesized ts is injective
     in doc_id). The upsert-side twin of q_dedup_url's keep-first."""
-    d = _docs(spark, sf, fanout=False).select("doc_id")
+    d = _docs(spark, sf).select("doc_id")
     url = F.concat(
         F.lit("https://s"),
         (F.col("doc_id") % 101).cast("string"),
@@ -1831,7 +1794,7 @@ def q_lm_surprisal(spark, sf):
     without the float-sum nondeterminism)."""
     from osmquadtreepostgis_spark.operators.tfidf import unigram_surprisal
 
-    return unigram_surprisal(_docs(spark, sf, fanout=False).select("doc_id", "text"))
+    return unigram_surprisal(_docs(spark, sf).select("doc_id", "text"))
 
 
 def q_anchor_extract(spark, sf):
@@ -1865,7 +1828,7 @@ def q_anchor_linkrank(spark, sf):
     from osmquadtreepostgis_spark.functions.html import extract_links
     from osmquadtreepostgis_spark.operators.linkrank import linkrank
 
-    d = _docs(spark, sf, fanout=False).select("doc_id", "text")
+    d = _docs(spark, sf).select("doc_id", "text")
     links = (
         d.select("doc_id", F.explode(extract_links(_anchored_html_col())))
         .select(
@@ -1889,7 +1852,7 @@ def q_spatial_cluster(spark, sf):
     doc-coordinate fixture."""
     from osmquadtreepostgis_spark.operators.geocluster import spatial_cluster
 
-    d = doc_coords(_docs(spark, sf, fanout=False).select("doc_id"))
+    d = doc_coords(_docs(spark, sf).select("doc_id"))
     return spatial_cluster(d, eps=6.0).select(
         "doc_id", "cluster_id", "cluster_size"
     )
@@ -1906,7 +1869,7 @@ def q_search_boolean(spark, sf):
     from osmquadtreepostgis_spark.operators.tfidf import search_conjunctive
 
     return search_conjunctive(
-        _docs(spark, sf, fanout=False), ["hash", "join", "vector"], k=25
+        _docs(spark, sf), ["hash", "join", "vector"], k=25
     )
 
 
@@ -1950,7 +1913,7 @@ def q_robots_gate(spark, sf):
     aggregate — no window, no sort. No-rule pages are allowed."""
     from osmquadtreepostgis_spark.operators.robots import robots_gate
 
-    pages = _docs(spark, sf, fanout=False).select("doc_id").withColumn("url", _robots_url())
+    pages = _docs(spark, sf).select("doc_id").withColumn("url", _robots_url())
     base = spark.range(37)
     dom = F.concat(F.lit("example"), F.col("id").cast("string"), F.lit(".org"))
     mk = lambda pred, allow, pref: base.filter(pred).select(  # noqa: E731
@@ -1980,7 +1943,7 @@ def q_dedup_incremental_bloom(spark, sf):
         dedup_incremental_bloom,
     )
 
-    docs = _docs(spark, sf, fanout=False)
+    docs = _docs(spark, sf)
     seen = docs.filter(F.col("doc_id") % 3 == 0).select("text")
     return dedup_incremental_bloom(docs, seen)
 
@@ -1995,7 +1958,7 @@ def q_hilbert_encode(spark, sf):
     key (quadrant digits are MSB-first), never a re-encode."""
     from osmquadtreepostgis_spark.functions.hilbert import with_hilbert
 
-    d = doc_coords(_docs(spark, sf, fanout=False).select("doc_id"))
+    d = doc_coords(_docs(spark, sf).select("doc_id"))
     return with_hilbert(d, "lon", "lat", order=16).select(
         "doc_id",
         "hilbert_d",
@@ -2013,7 +1976,7 @@ def q_line_dedup(spark, sf):
     kept-prose paths are exercised."""
     from osmquadtreepostgis_spark.operators.lines import strip_boilerplate_lines
 
-    d = _docs(spark, sf, fanout=False).select(
+    d = _docs(spark, sf).select(
         "doc_id",
         "source",
         F.concat(
@@ -2036,7 +1999,7 @@ def q_lang_rebalance(spark, sf):
     from osmquadtreepostgis_spark.operators.corpus import rebalance_languages
 
     return rebalance_languages(
-        _docs(spark, sf, fanout=False), alpha=0.5, target_rate=0.5
+        _docs(spark, sf), alpha=0.5, target_rate=0.5
     )
 
 
@@ -2078,7 +2041,7 @@ def q_semantic_dedup(spark, sf):
     clustering — is identical across engines despite fp."""
     from osmquadtreepostgis_spark.operators.cluster import resolve_duplicates
 
-    emb = fanout_small_scan(load_table(spark, sf, "embeddings"))
+    emb = load_table(spark, sf, "embeddings")
     pairs = KNN.ann_cosine_pairs_grid(emb, threshold=0.4, block_rows=2048)
     return resolve_duplicates(
         emb.select("vec_id"), pairs, id_col="vec_id"
@@ -2094,7 +2057,7 @@ def q_crawl_diff(spark, sf):
     ≡0 (mod 5)."""
     from osmquadtreepostgis_spark.operators.crawl import crawl_diff
 
-    d = _docs(spark, sf, fanout=False)
+    d = _docs(spark, sf)
     url = F.concat(
         F.lit("https://s"),
         (F.col("doc_id") % 101).cast("string"),
@@ -2127,7 +2090,7 @@ def q_raster_smooth(spark, sf):
         smooth_raster,
     )
 
-    d = doc_coords(_docs(spark, sf, fanout=False).select("doc_id"))
+    d = doc_coords(_docs(spark, sf).select("doc_id"))
     return smooth_raster(rasterize_points(d, depth=4), depth=4, kernel=1)
 
 

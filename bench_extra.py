@@ -10,7 +10,10 @@ Usage:
 Timings use the same methodology as bench.py (`df.count()` on the
 queries() callable, local[$SPARK_GRAFT_CPUS]); `--noop` switches to a
 noop-sink write (guide §1.4) for diagnosing column-pruning effects.
-Prints one JSON line: {"queries": {...}, "sf": ..., "runs": N}.
+Prints one JSON line: {"queries": {...}, "jobs": {...}, "sf": ...,
+"runs": N}; "jobs" is the Spark job count of each query's last run,
+read from the status store by job group, so a check that starts a job
+while the plan is being built shows up in every A/B.
 """
 
 from __future__ import annotations
@@ -53,7 +56,9 @@ def main() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
 
+    sc = spark.sparkContext
     timings: dict[str, float] = {}
+    jobs: dict[str, int] = {}
     for name in args.names:
         fn = qs[name]
         if args.explain_dir:
@@ -70,8 +75,9 @@ def main() -> None:
             continue
         best = float("inf")
         n = 0
-        for _ in range(args.runs):
-            spark.sparkContext.setJobDescription(f"bench_extra:{name}")
+        for i in range(args.runs):
+            group = f"bench_extra:{name}:{i}"
+            sc.setJobGroup(group, f"bench_extra:{name}")
             t0 = time.perf_counter()
             df = fn(spark, args.sf)
             if args.noop:
@@ -79,11 +85,13 @@ def main() -> None:
             else:
                 n = df.count()
             best = min(best, time.perf_counter() - t0)
-            spark.sparkContext.setJobDescription(None)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
         timings[name] = round(best, 3)
-        print(f"# {name}: {best:.3f}s rows={n}", file=sys.stderr)
+        print(f"# {name}: {best:.3f}s rows={n} jobs={jobs[name]}", file=sys.stderr)
 
-    print(json.dumps({"queries": timings, "sf": args.sf, "runs": args.runs}))
+    print(json.dumps({"queries": timings, "jobs": jobs, "sf": args.sf, "runs": args.runs}))
     spark.stop()
 
 

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import fanout_small_scan
 from .sketches import md5_int64, sql_md5_int64
 
 __all__ = [
@@ -66,7 +67,7 @@ def cdc_chunks(
     are filtered out up front (same as the twin's WHERE clause)."""
     mask = 1 << mask_bits
     toks = F.split(F.col(text_col), " ")
-    base = df.filter(F.col(text_col).isNotNull()).select(
+    base = fanout_small_scan(df).filter(F.col(text_col).isNotNull()).select(
         F.col(id_col),
         toks.alias("__toks"),
         F.size(toks).alias("__s"),

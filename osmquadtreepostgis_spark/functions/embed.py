@@ -22,8 +22,10 @@ Implementation notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..session import fanout_small_scan
 
 __all__ = [
     "hash_embedding",
@@ -31,6 +33,7 @@ __all__ = [
     "sql_hash_embedding",
     "hyperplane_weights",
     "hyperplane_bucket",
+    "hyperplane_buckets_frame",
     "sql_hyperplane_bucket",
 ]
 
@@ -259,6 +262,17 @@ def hyperplane_bucket(emb, n_bits: int = 8, dim: int = 64) -> Column:
     # (F.size(NULL) is NULL -> the when() would fall through to the
     # raise_error branch with a NULL message otherwise).
     return F.when(c.isNull(), F.lit(None).cast("long")).otherwise(bucket)
+
+
+def hyperplane_buckets_frame(
+    df: DataFrame, emb_col: str = "embedding", id_col: str = "vec_id"
+) -> DataFrame:
+    """(id_col, bucket): :func:`hyperplane_bucket` per row. Its dot
+    products are interpreted higher-order functions, the heavy per-row
+    stage, so the input is fanned out first."""
+    return fanout_small_scan(df).select(
+        id_col, hyperplane_bucket(emb_col).alias("bucket")
+    )
 
 
 def sql_hyperplane_bucket(expr: str, n_bits: int = 8, dim: int = 64) -> str:

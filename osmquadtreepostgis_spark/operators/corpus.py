@@ -12,8 +12,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import lang_id, quality_score, token_count
+from ..session import fanout_small_scan
+
 __all__ = [
     "quality_filter",
+    "corpus_stats",
     "sample_stratified",
     "weighted_sample",
     "pack_sequences",
@@ -39,7 +43,8 @@ def quality_filter(
     lengths, regexp) — Catalyst keeps it in codegen; at 100 TB the
     filter pushes into the same scan as the rest of the pipeline.
     Every rule is RE2-expressible so the DuckDB oracle computes the
-    identical booleans (no backreferences)."""
+    identical booleans (no backreferences). The input is fanned out:
+    curation composes its per-row repetition rules onto this stage."""
     toks = F.split(F.col(text_col), " ")
     n_words = F.size(toks).cast("long")
     # mean word length over non-empty tokens
@@ -56,13 +61,37 @@ def quality_filter(
         "r_min_mean_wl": mean_wl >= min_mean_word_len,
         "r_symbol_ratio": symbol_ratio <= max_symbol_ratio,
     }
-    out = df
+    out = fanout_small_scan(df)
     for name, cond in rules.items():
         out = out.withColumn(name, cond)
     keep: Column = F.lit(True)
     for name in rules:
         keep = keep & F.col(name)
     return out.withColumn("keep", keep)
+
+
+def corpus_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Dataset-card corpus report: doc/token counts, exact token-count
+    percentiles (p50/p90/p99), mean quality score and per-language doc
+    counts, one row per detected language with the global stats
+    repeated. Percentile is Spark's exact interpolated percentile, as
+    DuckDB's quantile_cont. Per-doc language id and quality score are
+    heavy: the input is fanned out."""
+    d = fanout_small_scan(df).select(
+        token_count(text_col).alias("ntok"),
+        lang_id(text_col).alias("lang"),
+        quality_score(text_col).alias("q"),
+    )
+    g = d.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("ntok").alias("total_tokens"),
+        F.expr("percentile(ntok, 0.5)").alias("p50_tokens"),
+        F.expr("percentile(ntok, 0.9)").alias("p90_tokens"),
+        F.expr("percentile(ntok, 0.99)").alias("p99_tokens"),
+        F.round(F.avg("q"), 4).alias("mean_quality"),
+    )
+    per_lang = d.groupBy("lang").agg(F.count(F.lit(1)).alias("lang_docs"))
+    return per_lang.crossJoin(F.broadcast(g)).select("lang", "lang_docs", *g.columns)
 
 
 def sample_stratified(

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.sketches import word_shingles_tokens
 from ..functions.text import fingerprint
+from ..session import fanout_small_scan
 
 __all__ = [
     "dedup_exact",
@@ -94,11 +95,24 @@ def ngram_jaccard_pairs(
     (vocab-sized), rank equi-join + doc-key aggregate, pair equi-join
     on prefix ranks. All keys are content-derived; no driver state.
     """
-    toks = df.select(
-        F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("__toks")
+    return set_jaccard_pairs(_shingles(df, n, id_col, text_col), threshold)
+
+
+def _shingles(
+    df: DataFrame,
+    n: int,
+    id_col: str,
+    text_col: str,
+    out_id: str = "id",
+    out_sh: str = "__sh",
+) -> DataFrame:
+    """(out_id, out_sh): each doc's word ``n``-gram shingle array over
+    its whitespace tokens. The heavy per-row stage every shingling
+    operator shares, so this is where their input is fanned out."""
+    toks = fanout_small_scan(df).select(
+        F.col(id_col).alias(out_id), F.split(F.col(text_col), " ").alias("__toks")
     )
-    sh = toks.select("id", word_shingles_tokens(F.col("__toks"), n).alias("__sh"))
-    return set_jaccard_pairs(sh, threshold)
+    return toks.select(out_id, word_shingles_tokens(F.col("__toks"), n).alias(out_sh))
 
 
 def _rank_frame(dfcnt: DataFrame) -> DataFrame:
@@ -386,18 +400,9 @@ def minhash_verified_join(
         )
     cand = j.filter(F.col("band") == first_shared).select("id_p", "id_x")
 
-    def _sh(d: DataFrame, out_id: str, out_sh: str) -> DataFrame:
-        toks = d.select(
-            F.col(id_col).alias(out_id),
-            F.split(F.col(text_col), " ").alias("__toks"),
-        )
-        return toks.select(
-            out_id, word_shingles_tokens(F.col("__toks"), n).alias(out_sh)
-        )
-
-    ver = cand.join(_sh(probe, "id_p", "__fp_sh"), "id_p").join(
-        _sh(index, "id_x", "__fx_sh"), "id_x"
-    )
+    ver = cand.join(
+        _shingles(probe, n, id_col, text_col, "id_p", "__fp_sh"), "id_p"
+    ).join(_shingles(index, n, id_col, text_col, "id_x", "__fx_sh"), "id_x")
     inter = F.size(F.array_intersect("__fp_sh", "__fx_sh"))
     jac = inter / (F.size("__fp_sh") + F.size("__fx_sh") - inter)
     return (
@@ -443,17 +448,12 @@ def dedup_against(
     elif mode != "exact":
         raise ValueError(f"unknown mode {mode!r}")
 
-    def _sh(d: DataFrame) -> DataFrame:
-        toks = d.select(
-            F.col(id_col).alias("id"),
-            F.split(F.col(text_col), " ").alias("__toks"),
-        )
-        return toks.select(
-            "id", word_shingles_tokens(F.col("__toks"), n).alias("__sh")
-        )
-
     if mode == "exact":
-        hits = set_jaccard_join(_sh(new), _sh(seen), threshold)
+        hits = set_jaccard_join(
+            _shingles(new, n, id_col, text_col),
+            _shingles(seen, n, id_col, text_col),
+            threshold,
+        )
     per_new = hits.groupBy(F.col("id_p").alias(id_col)).agg(
         F.count(F.lit(1)).alias("n_seen_dups")
     )
@@ -523,7 +523,7 @@ def duplicate_spans(
     # CollapseProject, turning each element_at back into a full split
     # per reference — O(S^2·n) string work per row
     grams = _pos_gram_structs(F.split(F.col(text_col), " "), n)
-    ex = df.select(
+    ex = fanout_small_scan(df).select(
         F.col(id_col).alias("id"), F.explode(grams).alias("t")
     ).select("id", F.col("t.pos").alias("pos"), F.col("t.g").alias("g"))
     dup_grams = (
@@ -670,13 +670,7 @@ def _minhash_sig_frame(
     evaluates n_hashes interpreted array transforms (md5 per shingle
     re-hashed per permutation) — ~20x slower; keep it off the hot
     path (same lesson as SimHash)."""
-    toks = df.select(
-        F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("__toks")
-    )
-    shingled = toks.select(
-        "id", word_shingles_tokens(F.col("__toks"), n).alias("__sh")
-    )
-    hashed = shingled.select(
+    hashed = _shingles(df, n, id_col, text_col).select(
         "id",
         F.explode_outer(
             F.transform(
@@ -887,10 +881,7 @@ def minhash_verified_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    toks = df.select(
-        F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("__toks")
-    )
-    sh = toks.select("id", word_shingles_tokens(F.col("__toks"), n).alias("__sh"))
+    sh = _shingles(df, n, id_col, text_col)
     a = sh.select(F.col("id").alias("id_a"), F.col("__sh").alias("__fa"))
     b = sh.select(F.col("id").alias("id_b"), F.col("__sh").alias("__fb"))
     inter = F.size(F.array_intersect("__fa", "__fb"))
@@ -926,13 +917,7 @@ def simhash_pairs(
     # sums, whole-stage codegen'd). The scalar simhash64 Column is
     # semantically identical but evaluates 60 interpreted array
     # aggregates per row — ~50x slower; never use it on the hot path.
-    toks = df.select(
-        F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("__toks")
-    )
-    shingled = toks.select(
-        "id", word_shingles_tokens(F.col("__toks"), n).alias("__sh")
-    )
-    hashed = shingled.select(
+    hashed = _shingles(df, n, id_col, text_col).select(
         "id",
         F.explode_outer(
             F.transform(

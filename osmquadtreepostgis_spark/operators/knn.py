@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.cells import cell_encode_udf, cell_neighbors_udf
+from ..session import fanout_small_scan
 
 __all__ = [
     "knn_exact",
@@ -50,7 +51,7 @@ def knn_exact(
 ) -> DataFrame:
     """Exact kNN: every (query, point) scored; deterministic ties by
     point id. queries: (q_id, q_lon, q_lat); points: (p_id, lon, lat)."""
-    j = points.crossJoin(F.broadcast(queries))
+    j = fanout_small_scan(points).crossJoin(F.broadcast(queries))
     d2 = _dist2(F.col("q_lon"), F.col("q_lat"), F.col("lon"), F.col("lat"))
     w = Window.partitionBy(q_id).orderBy(F.col("dist2").asc(), F.col(p_id).asc())
     return (
@@ -198,7 +199,8 @@ def knn_grid_guaranteed(
     # cache the encoded points: every expansion round (and the
     # exhaustive fallback) re-reads them, and the pandas-UDF encode is
     # the expensive part of the probe join
-    p = points.withColumn("__cell", cell_encode_udf(depth)("lon", "lat")).cache()
+    p = fanout_small_scan(points).withColumn("__cell", cell_encode_udf(depth)("lon", "lat"))
+    p = p.cache()
     parts = []
     remaining = queries
     r = 1
@@ -298,7 +300,7 @@ def ann_cosine_topk(
     q_vec: str = "q_vec",
 ) -> DataFrame:
     """Brute-force cosine top-k per query (broadcast queries)."""
-    j = emb.crossJoin(F.broadcast(queries))
+    j = fanout_small_scan(emb).crossJoin(F.broadcast(queries))
     sim = _cosine(F.col(vec_col), F.col(q_vec))
     w = Window.partitionBy(q_id).orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
     return (
@@ -648,6 +650,7 @@ def ann_cosine_ivf(
     set is |data| * n_probe / n_anchors per query instead of |data|.
     Approximate — recall measured in pytest against ann_cosine_topk.
     """
+    emb = fanout_small_scan(emb)
     if anchors is None:
         anchors = (
             emb.orderBy(F.col(id_col).asc())

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import fanout_small_scan
 from ..sources.gazetteer import VOCAB_GAZETTEER
 
 # "Mention of {City} at {lat}, {lon}" — the synthetic pages template
@@ -87,8 +88,9 @@ def mine_gazetteer_terms(
         ),
     )
     matches = F.filter(counted, lambda s: s["n"] > 0)
+    # the per-doc token x gazetteer match is heavy: fan the input out
     return (
-        df.select(F.col(id_col), toks.alias("__toks"))
+        fanout_small_scan(df).select(F.col(id_col), toks.alias("__toks"))
         .select(F.col(id_col), F.explode(matches).alias("g"))
         .select(
             id_col,

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.sketches import md5_int64, sql_md5_int64
+from ..session import fanout_small_scan
 
 __all__ = ["explode_passages", "passage_dedup", "sql_passage_dedup"]
 
@@ -83,7 +84,7 @@ def passage_dedup(
     ≈ 8 MB of text at the default width; raise it for giant docs —
     the rank stays inside int64 for doc ids < 2^43).
     """
-    p = explode_passages(df, id_col, text_col, words_per_passage)
+    p = explode_passages(fanout_small_scan(df), id_col, text_col, words_per_passage)
     p = p.withColumn("__h", md5_int64(F.col("passage"))).withColumn(
         "__rank", F.col(id_col) * F.lit(int(idx_bound)) + F.col("idx")
     )

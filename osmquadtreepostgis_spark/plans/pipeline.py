@@ -32,7 +32,6 @@ __all__ = [
     "doc_coords",
     "sql_doc_coords",
     "load_table",
-    "fanout_small_scan",
     "fixture_polygon_index",
     "documents_pipeline",
     "pages_pipeline",
@@ -44,29 +43,6 @@ __all__ = [
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def fanout_small_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Round-robin repartition a scan whose split count is below the
-    session's parallelism.
-
-    A parquet file is splittable only at row-group boundaries, so a
-    single-row-group table scans as ONE task no matter what
-    ``maxPartitionBytes`` says — and every narrow operation fused into
-    that scan (shingling, regex mining, embedding math) runs on one
-    core while the rest of the machine idles (guide §2.5 "input skew:
-    one huge unsplittable file — repartition immediately after the
-    read"). The repartition is scale-adaptive, not a tuned constant:
-    at 100 TB the table has thousands of splits, the condition is
-    false, and this is a no-op; it fires exactly in the
-    small-file/local case where the exchange it adds is a few MB.
-    Column pruning pushes below the added exchange, so count-style
-    queries shuffle only the columns they read."""
-    spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 @functools.cache
@@ -105,10 +81,7 @@ def documents_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (tile, poly_id, n_mentions, n_docs, n_entities) sorted.
     """
-    # fan the single-row-group scan out before the regex mining — the
-    # expensive narrow stage otherwise runs as one task (see
-    # fanout_small_scan; no-op on a many-split production table)
-    docs = fanout_small_scan(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     mentions = mine_gazetteer_terms(docs)  # doc_id, entity, lon, lat, n_occurrences
     # running progress counters (the reference's 4-counter progress
     # line, docs/output.txt:16,69) — read via df.observe listeners

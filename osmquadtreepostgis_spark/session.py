@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_ARROW_BATCH = 1 << 14  # the reference's scan batch (processpostgis.cpp:143)
 
@@ -49,3 +49,30 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def fanout_small_scan(df: DataFrame) -> DataFrame:
+    """Round-robin repartition a narrow plan with fewer partitions than
+    the session's parallelism; return any other frame (streaming, or
+    holding an exchange) unchanged. Operators call it on the input of
+    their heavy per-row work. It starts no job: a narrow plan is not
+    AQE-wrapped, so building its RDD only lists the input splits."""
+    if df.isStreaming:
+        return df
+    plan = df._jdf.queryExecution().executedPlan()
+    if _has_exchange(plan):
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if plan.execute().getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
+
+def _has_exchange(plan) -> bool:
+    """Whether a physical plan, a cached relation's included, is AQE-wrapped
+    or holds an exchange."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec" or name.endswith("ExchangeExec"):
+        return True
+    kids = (s.apply(i) for s in (plan.children(), plan.innerChildren()) for i in range(s.size()))
+    return any(_has_exchange(k) for k in kids)

@@ -9,7 +9,9 @@ Invariants the 100 TB posture depends on:
   small-side cross joins must plan as BroadcastNestedLoopJoin;
 * the flagship plans run exactly one Python stage, the PIP probe:
   every Python stage pays pyspark's per-task import-cache flush again
-  on each worker's first task.
+  on each worker's first task;
+* the scan fan-out (session.fanout_small_scan) sits at the input of
+  the operators whose per-row work is heavy, and nowhere else.
 """
 
 import pytest
@@ -60,20 +62,27 @@ def test_no_window_over_content_key(name, spark):
         )
 
 
-def _python_nodes(plan):
-    """Class names of the Python-evaluation nodes of a physical plan."""
-    found, stack = [], [plan]
+def _nodes(plan):
+    """Every node of a physical plan, AQE's initial plan included."""
+    stack = [plan]
     while stack:
         node = stack.pop()
-        name = node.getClass().getName()
-        if name.endswith(".AdaptiveSparkPlanExec"):
+        if node.getClass().getName().endswith(".AdaptiveSparkPlanExec"):
             stack.append(node.executedPlan())
             continue
-        if name.startswith("org.apache.spark.sql.execution.python."):
-            found.append(name.rsplit(".", 1)[1])
+        yield node
         kids = node.children()
         stack.extend(kids.apply(i) for i in range(kids.size()))
-    return found
+
+
+def _python_nodes(plan):
+    """Class names of the Python-evaluation nodes of a physical plan."""
+    names = (node.getClass().getName() for node in _nodes(plan))
+    return [
+        n.rsplit(".", 1)[1]
+        for n in names
+        if n.startswith("org.apache.spark.sql.execution.python.")
+    ]
 
 
 def test_flagship_plans_have_one_python_stage(spark):
@@ -90,3 +99,56 @@ def test_flagship_plans_have_one_python_stage(spark):
     for name, df in plans.items():
         nodes = _python_nodes(df._jdf.queryExecution().executedPlan())
         assert nodes == ["MapInArrowExec"], f"{name}: Python stages {nodes}"
+
+
+def _fanned_inputs(df):
+    """One key per input a frame's plan fans out: the nodes under each
+    round-robin exchange, a scan keyed by its paths. Two branches that
+    read different columns of one input (column pruning pushes each
+    branch's columns below its exchange) share a key."""
+
+    def key(node):
+        name = node.getClass().getSimpleName()
+        if name == "FileSourceScanExec":
+            return node.relation().location().rootPaths().toString()
+        return name
+
+    plan = df._jdf.queryExecution().executedPlan()
+    return {
+        tuple(key(n) for n in _nodes(node.child()))
+        for node in _nodes(plan)
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec"
+        and node.outputPartitioning().getClass().getSimpleName()
+        == "RoundRobinPartitioning"
+    }
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "collocations",
+        "tfidf_keywords",
+        "pip_shuffle_cover",
+        "pip_points_in_boxes",
+    ],
+)
+def test_light_operators_not_fanned_out(name, spark):
+    df = entrymod.queries()[name](spark, SF_DIR)
+    assert not _fanned_inputs(df), f"{name}: fanned out"
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "mine_entities",
+        "knn_exact",
+        "dedup_spans",
+        "knn_label_eval",
+        "quality_filter",
+        "diverse_sample",
+        "corpus_stats",
+    ],
+)
+def test_heavy_operators_fan_out_once(name, spark):
+    df = entrymod.queries()[name](spark, SF_DIR)
+    assert len(_fanned_inputs(df)) == 1, (name, _fanned_inputs(df))
