@@ -20,10 +20,9 @@ equi-join on node ids:
 * no ``collect_list`` neighborhoods — a viral near-dup hub with 10^7
   edges stays splittable because the min-neighbor reduce is a partial
   (map-side) aggregate and the join back is AQE-skew-splittable;
-* per-round lineage is cut with ``localCheckpoint`` (on a real
-  cluster point ``spark.sparkContext.setCheckpointDir`` at durable
-  storage and flip ``use_local_checkpoint=False`` for fault-tolerant
-  truncation);
+* per-round lineage is cut with :func:`..session.barrier`, durable
+  once ``spark.sparkContext.setCheckpointDir`` points at durable
+  storage;
 * convergence is detected with one tiny action per round — an
   order-independent fingerprint ``(count, xor-ish sum of edge
   hashes)`` of the canonical edge set, not a full frame comparison.
@@ -42,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import barrier
 
 __all__ = [
     "connected_components",
@@ -78,7 +79,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """Component label per node of the undirected graph ``edges``.
 
@@ -100,18 +100,14 @@ def connected_components(
     round: lineage must not compound across rounds or Catalyst
     re-analyzes a growing tree.
     """
-    e = _canon(edges, id_a, id_b)
-    if use_local_checkpoint:
-        e = e.localCheckpoint(eager=True)
-    else:  # durable checkpoint dir must be set by the caller
-        e = e.checkpoint(eager=True)
+    e = barrier(_canon(edges, id_a, id_b))
     # every later read — node set included — comes off this
     # materialized frame, so the (possibly expensive) upstream pair
     # query runs exactly once
     e0 = e
     fp = _fingerprint(e)
 
-    for rnd in range(max_iter):
+    for _ in range(max_iter):
         # ---- large-star: for every node u, attach each LARGER
         # neighbor v to m(u) = min(N(u) ∪ {u}).  Directed both ways so
         # each endpoint sees its full neighborhood.
@@ -138,7 +134,7 @@ def connected_components(
         # its SMALLER neighbors N<(u); connect all of N<(u) ∪ {u} to
         # the minimum of that set.
         smins = large.groupBy("big").agg(F.min("small").alias("m"))
-        nxt = (
+        e = barrier(
             large.join(smins, "big")
             .select(F.col("small").alias("x"), "m")
             .unionByName(smins.select(F.col("big").alias("x"), "m"))
@@ -146,16 +142,11 @@ def connected_components(
             .select(F.col("x").alias("big"), F.col("m").alias("small"))
             .distinct()
         )
-        if use_local_checkpoint:
-            nxt = nxt.localCheckpoint(eager=True)
-        else:
-            nxt = nxt.checkpoint(eager=True)
-        e = nxt
         # fingerprint EVERY round (r6): the check reads the round's
         # already-materialized checkpoint, ~0.1 s, while a wasted
         # extra star round costs ~1 s — the every-2nd-round schedule
         # saved the wrong side of that trade
-        nfp = _fingerprint(nxt)
+        nfp = _fingerprint(e)
         if nfp == fp:
             break
         fp = nfp

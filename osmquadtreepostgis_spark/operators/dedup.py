@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.sketches import word_shingles_tokens
 from ..functions.text import fingerprint
-from ..session import fanout_small_scan
+from ..session import barrier, fanout_small_scan
 
 __all__ = [
     "dedup_exact",
@@ -142,7 +142,7 @@ def _rank_frame(dfcnt: DataFrame) -> DataFrame:
     )
     # pin the partitioning: the offsets collect below and the ranked
     # output must read the SAME materialized partitions
-    p = p.localCheckpoint(eager=True)
+    p = barrier(p)
     cnts = {
         r["__part"]: r["cnt"]
         for r in p.groupBy("__part").agg(F.count(F.lit(1)).alias("cnt")).collect()
@@ -207,21 +207,17 @@ def set_jaccard_pairs(sets: DataFrame, threshold: float) -> DataFrame:
     # (VERDICT r2 what's-wrong #1). dfcnt is checkpointed so the
     # range-sampling pass inside _rank_frame does not re-run it.
     ex = sets.select("id", F.explode("__sh").alias("__s"))
-    dfcnt = (
-        ex.groupBy("__s")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .localCheckpoint(eager=True)
-    )
+    dfcnt = barrier(ex.groupBy("__s").agg(F.count(F.lit(1)).alias("__df")))
     rankf = _rank_frame(dfcnt)
     # r6: the per-doc rank-array frame is materialized ONCE
-    # (localCheckpoint) and both self-join arms read it — the old
+    # (a barrier) and both self-join arms read it — the old
     # shape re-ran the whole df+window+collect pipeline per arm
     # because collect_list defeats ReuseExchange. With ranks instead
     # of strings the materialized frame is one int64 array per doc
     # (~8 bytes/shingle vs ~2 string arrays at ~20 bytes/shingle), so
     # the barrier that used to double the query time now costs a few
     # MB per million docs (guide §2.3 / §2.4).
-    arr = _prefix_frame(sets, rankf, threshold).localCheckpoint(eager=True)
+    arr = barrier(_prefix_frame(sets, rankf, threshold))
     plen = _prefix_len(F.col("__size"), threshold)
     pref = arr.select(
         "id", "__size", "__shfull",

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.cells import cell_encode_udf, cell_neighbors_udf
-from ..session import fanout_small_scan
+from ..session import barrier, fanout_small_scan
 
 __all__ = [
     "knn_exact",
@@ -564,10 +564,11 @@ def kmeans_anchors(
     Deterministic end to end (init by id, ties broken by anchor id),
     so the anchors — and any IVF result built on them — are stable
     across runs and cluster sizes.  Each iteration is one shuffle on
-    the anchor key; lineage is cut per round with localCheckpoint.
+    the anchor key; lineage is cut per round with a
+    :func:`..session.barrier`.
     Empty buckets keep their previous centroid (coalesce on the join).
     """
-    anchors = (
+    anchors = barrier(
         emb.orderBy(F.col(id_col).asc())
         .limit(k)
         .select(
@@ -576,7 +577,7 @@ def kmeans_anchors(
             .alias("anchor_id"),
             F.col(vec_col).alias("anchor_vec"),
         )
-    ).localCheckpoint(eager=True)
+    )
     for _ in range(iters):
         assigned = _assign_nearest_anchor(emb, anchors, id_col, vec_col).select(
             "anchor_id", vec_col
@@ -586,13 +587,11 @@ def kmeans_anchors(
                 *[F.avg(F.col(vec_col)[i]) for i in range(dim)]
             ).alias("new_vec")
         )
-        anchors = (
-            anchors.join(means, "anchor_id", "left")
-            .select(
+        anchors = barrier(
+            anchors.join(means, "anchor_id", "left").select(
                 "anchor_id",
                 F.coalesce("new_vec", "anchor_vec").alias("anchor_vec"),
             )
-            .localCheckpoint(eager=True)
         )
     return anchors
 

@@ -43,6 +43,7 @@ from ..operators.dedup import (
     minhash_verified_pairs,
     ngram_jaccard_pairs,
 )
+from ..session import barrier
 
 __all__ = ["curate_corpus"]
 
@@ -57,8 +58,6 @@ def curate_corpus(
     max_dup_2gram_frac: float = 0.065,
     jaccard_threshold: float = 0.5,
     shingle_n: int = 3,
-    materialize: bool = True,
-    barrier: str = "local",
     pair_mode: str = "exact",
     n_hashes: int | None = None,
     bands: int | None = None,
@@ -80,42 +79,17 @@ def curate_corpus(
       threshold) — a fixed small geometry silently loses borderline
       pairs (ADVICE r4).
 
-    ``materialize``/``barrier`` cut lineage after the rule stage and
+    A :func:`..session.barrier` cuts lineage after the rule stage and
     after the incremental stage.  The dedup machinery downstream
     deliberately re-executes its input per join branch (collect_list
     defeats ReuseExchange — see set_jaccard_pairs); without a barrier
     that re-execution compounds through the composed stages and
     re-runs the per-doc repetition HOFs many times over (measured
-    654 s -> ~25 s at sf0.1).  ``barrier`` modes (all produce the
-    IDENTICAL audit frame — pinned by tests/test_curation.py):
-
-    * ``"local"`` (default) — ``localCheckpoint``: executor-memory
-      blocks, fast, NOT durable; a lost executor forces full
-      recompute.  Right for single-node / short jobs.
-    * ``"durable"`` — ``checkpoint`` to
-      ``sparkContext.setCheckpointDir`` storage (HDFS/S3 on a
-      cluster): survives executor loss; the mode a 1000-executor run
-      wants.  Raises up front if no checkpoint dir is configured.
-    * ``materialize=False`` — no barrier at all (tiny inputs,
-      plan-inspection).
+    654 s -> ~25 s at sf0.1).  The barriers are durable when the
+    context has a checkpoint dir set (HDFS/S3 on a cluster, so the run
+    survives executor loss) and executor-local otherwise; the audit is
+    the same either way.
     """
-    if barrier not in ("local", "durable"):
-        raise ValueError(f"barrier must be 'local' or 'durable', got {barrier!r}")
-    if materialize and barrier == "durable":
-        sc = docs.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "barrier='durable' needs sparkContext.setCheckpointDir(...) "
-                "pointed at durable storage"
-            )
-
-    def cut(df: DataFrame) -> DataFrame:
-        if not materialize:
-            return df
-        if barrier == "durable":
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     q = quality_filter(docs, min_words=min_words, text_col=text_col)
     audited = q.select(
         id_col,
@@ -126,7 +100,7 @@ def curate_corpus(
             & (dup_ngram_frac(text_col, 2) <= max_dup_2gram_frac)
         ).alias("keep_repetition"),
     )
-    audited = cut(audited)
+    audited = barrier(audited)
     if seen is not None:
         inc = dedup_against(
             audited.filter(F.col("keep_quality") & F.col("keep_repetition")),
@@ -148,7 +122,7 @@ def curate_corpus(
             "keep_not_seen",
             F.col("keep_quality") & F.col("keep_repetition"),
         )
-    audited = cut(audited)
+    audited = barrier(audited)
     survivors = audited.filter(
         F.col("keep_quality") & F.col("keep_repetition") & F.col("keep_not_seen")
     ).select(id_col, text_col)

@@ -68,6 +68,17 @@ def fanout_small_scan(df: DataFrame) -> DataFrame:
     return df
 
 
+def barrier(df: DataFrame) -> DataFrame:
+    """Cut ``df``'s lineage by materializing it now. The cut is durable
+    (``checkpoint``) when the context has a checkpoint dir set and
+    executor-local (``localCheckpoint``) otherwise, so pointing
+    ``sparkContext.setCheckpointDir`` at durable storage makes every
+    barrier in the engine survive executor loss."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=True)
+    return df.checkpoint(eager=True)
+
+
 def _has_exchange(plan) -> bool:
     """Whether a physical plan, a cached relation's included, is AQE-wrapped
     or holds an exchange."""

@@ -130,14 +130,20 @@ def test_resolve_best_quality_string_ids(spark):
     }
 
 
-def test_cc_durable_checkpoint_branch(spark, tmp_path):
-    """use_local_checkpoint=False goes through the durable checkpoint
-    dir (the fault-tolerant cluster path)."""
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+def test_cc_durable_checkpoint_branch(spark, checkpoint_dir):
+    """With a checkpoint dir set, the rounds cut lineage with durable
+    checkpoints (the fault-tolerant cluster path)."""
     edges = [(i, i + 1) for i in range(30)] + [(100, 200)]
     e = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(e, use_local_checkpoint=False).collect()
-    }
+    got = {r["node"]: r["component"] for r in connected_components(e).collect()}
     assert got == _uf_components(edges)
+
+
+def test_cc_unconverged_raises(spark):
+    """A 40-node chain needs several star rounds; one round must raise
+    rather than return an unconverged labelling."""
+    e = spark.createDataFrame(
+        [(i, i + 1) for i in range(39)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(e, max_iter=1)

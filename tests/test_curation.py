@@ -150,41 +150,18 @@ def test_minhash_verified_default_geometry_recalls_borderline_pair(spark):
     assert r["jaccard"] == 0.5, r["jaccard"]
 
 
-def test_durable_barrier_requires_checkpoint_dir(spark):
-    """Fail fast at plan-build time, not after minutes of work.
-    (Must run before any test that sets the session's checkpoint dir.)"""
+def test_barrier_modes_produce_identical_audit(spark, audit, checkpoint_dir):
+    """Local barriers (the module fixture, built before any checkpoint
+    dir is set) and durable ones (checkpoint dir set) produce the
+    identical audit frame (VERDICT r4 #3 — the barrier is a
+    lineage/perf device, never a semantics one)."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    if spark.sparkContext.getCheckpointDir() is not None:
-        pytest.skip("checkpoint dir already set by an earlier test")
-    with pytest.raises(ValueError, match="setCheckpointDir"):
-        curate_corpus(docs, barrier="durable")
-
-
-def test_barrier_modes_produce_identical_audit(spark, tmp_path, audit):
-    """barrier='local' (the fixture), barrier='durable', and no
-    barrier at all produce the identical audit frame (VERDICT r4 #3 —
-    the barrier is a lineage/perf device, never a semantics one)."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    kw = dict(
-        seen=docs.filter(F.col("doc_id") < 100),
-    )
-    base = audit.sort_values("doc_id", ignore_index=True)
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     durable = (
-        curate_corpus(docs.filter(F.col("doc_id") >= 100), barrier="durable", **kw)
+        curate_corpus(
+            docs.filter(F.col("doc_id") >= 100),
+            seen=docs.filter(F.col("doc_id") < 100),
+        )
         .toPandas()
         .sort_values("doc_id", ignore_index=True)
     )
-    assert base.equals(durable)
-    nobarrier = (
-        curate_corpus(docs.filter(F.col("doc_id") >= 100), materialize=False, **kw)
-        .toPandas()
-        .sort_values("doc_id", ignore_index=True)
-    )
-    assert base.equals(nobarrier)
-
-
-def test_bad_barrier_value_raises(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    with pytest.raises(ValueError, match="barrier"):
-        curate_corpus(docs, barrier="ram")
+    assert durable.equals(audit.sort_values("doc_id", ignore_index=True))

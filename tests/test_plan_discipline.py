@@ -11,8 +11,13 @@ Invariants the 100 TB posture depends on:
   every Python stage pays pyspark's per-task import-cache flush again
   on each worker's first task;
 * the scan fan-out (session.fanout_small_scan) sits at the input of
-  the operators whose per-row work is heavy, and nowhere else.
+  the operators whose per-row work is heavy, and nowhere else;
+* lineage is cut only by session.barrier, so the checkpoint dir alone
+  decides whether every cut is durable.
 """
+
+import pathlib
+import re
 
 import pytest
 
@@ -152,3 +157,19 @@ def test_light_operators_not_fanned_out(name, spark):
 def test_heavy_operators_fan_out_once(name, spark):
     df = entrymod.queries()[name](spark, SF_DIR)
     assert len(_fanned_inputs(df)) == 1, (name, _fanned_inputs(df))
+
+
+def test_lineage_barriers_live_in_session():
+    """Only session.barrier cuts lineage: a checkpoint call anywhere
+    else in the package would decide durability on its own, ignoring
+    the checkpoint dir."""
+    pkg = pathlib.Path(entrymod.__file__).parent / "osmquadtreepostgis_spark"
+    call = re.compile(r"\.(localCheckpoint|checkpoint)\(")
+    offenders = [
+        f"{path.relative_to(pkg)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.name != "session.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if call.search(line)
+    ]
+    assert not offenders, offenders
