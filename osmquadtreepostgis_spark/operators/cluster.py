@@ -23,9 +23,15 @@ equi-join on node ids:
 * per-round lineage is cut with :func:`..session.barrier`, durable
   once ``spark.sparkContext.setCheckpointDir`` points at durable
   storage;
-* convergence is detected with one tiny action per round — an
-  order-independent fingerprint ``(count, xor-ish sum of edge
-  hashes)`` of the canonical edge set, not a full frame comparison.
+* convergence is detected from an order-independent fingerprint
+  ``(count, xor of edge hashes)`` of the canonical edge set, observed
+  (``DataFrame.observe``) while the round's barrier materializes, so
+  the check starts no job of its own.
+
+A graph of at most :data:`DRIVER_EDGES` canonical edges skips the
+rounds: its edges are collected through Arrow and labelled on the
+driver by a numpy min-label pass (a few MB of int64 pairs), which
+replaces ~8 Spark jobs per round with one collect.
 
 At convergence the edge set is a forest of depth-1 stars rooted at
 each component's minimum id, so the component label of every
@@ -39,8 +45,12 @@ part of the BASELINE.json training-data mandate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 
 from ..session import barrier
 
@@ -62,16 +72,68 @@ def _canon(edges: DataFrame, a: str, b: str) -> DataFrame:
     )
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    """Order-independent edge-set fingerprint: one cheap action."""
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        # bit_xor: order-independent and cannot overflow under ANSI
-        # (a plain sum of int64 hashes does); count guards the xor's
-        # pair-cancellation blind spot
-        F.coalesce(F.expr("bit_xor(xxhash64(big, small))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+# Largest canonical edge set finished on the driver: 16 MB of int64
+# pairs, collected once, against ~8 Spark jobs per star round.
+DRIVER_EDGES = 1 << 20
+
+
+def _cut(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+    """``barrier(edges)`` and the order-independent fingerprint of the
+    edge set, observed while the barrier materializes (no extra job)."""
+    obs = Observation()
+    e = barrier(
+        edges.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            # bit_xor: order-independent and cannot overflow under ANSI
+            # (a plain sum of int64 hashes does); count guards the xor's
+            # pair-cancellation blind spot
+            F.coalesce(F.expr("bit_xor(xxhash64(big, small))"), F.lit(0)).alias("h"),
+        )
+    )
+    return e, (int(obs.get["n"]), int(obs.get["h"]))
+
+
+def _min_labels(b: np.ndarray, s: np.ndarray, n: int) -> np.ndarray:
+    """Per node position ``0..n-1``, the smallest position in its
+    component of the graph with edges ``(b[i], s[i])``. Each pass points
+    every node at its tree's root, then hooks the larger root of each
+    edge joining two trees to the smallest root it meets; pointers only
+    decrease, so the loop ends, and then each root is its component's
+    minimum."""
+    f = np.arange(n)
+    while True:
+        while True:
+            ff = f[f]
+            if np.array_equal(ff, f):
+                break
+            f = ff
+        fb, fs = f[b], f[s]
+        hi, lo = np.maximum(fb, fs), np.minimum(fb, fs)
+        join = hi != lo
+        if not join.any():
+            return f
+        np.minimum.at(f, hi[join], lo[join])
+
+
+def _driver_components(e: DataFrame, dtype) -> DataFrame:
+    """(node, component) of the canonical edge frame ``e`` with ids of
+    Spark type ``dtype``, labelled on the driver. Ids map to positions
+    in Arrow's sort order, which is Spark's for integers and
+    binary-collated strings, so the smallest position is the smallest
+    id."""
+    t = e.toArrow()
+    both = pa.concat_arrays(
+        [t.column("big").combine_chunks(), t.column("small").combine_chunks()]
+    )
+    ids = pc.unique(both)
+    ids = ids.take(pc.sort_indices(ids))
+    pos = pc.index_in(both, value_set=ids).to_numpy()
+    f = _min_labels(pos[: t.num_rows], pos[t.num_rows :], len(ids))
+    return e.sparkSession.createDataFrame(
+        pa.table({"node": ids, "component": ids.take(pa.array(f))}),
+        StructType([StructField("node", dtype), StructField("component", dtype)]),
+    )
 
 
 def connected_components(
@@ -91,21 +153,27 @@ def connected_components(
     ``max_iter`` bounds the star rounds; 25 doublings cover any graph
     that fits in 2^25-deep forests (i.e. any realistic corpus — the
     bound is O(log n) rounds).  Raises if the loop exits unconverged
-    so a silent wrong answer is impossible.
+    so a silent wrong answer is impossible.  A graph of at most
+    :data:`DRIVER_EDGES` canonical edges over integer or string ids
+    runs no rounds: it is labelled on the driver, which runs to a
+    fixpoint and so cannot return unconverged.
 
-    Fixed-cost note: each round costs two driver actions (checkpoint
-    materialize + fingerprint); the fingerprint reads the round's
-    already-checkpointed edges, so it is ~10x cheaper than a wasted
-    extra star round and runs every round. Checkpoints happen every
-    round: lineage must not compound across rounds or Catalyst
-    re-analyzes a growing tree.
+    Fixed-cost note: the initial cut and each round cost one barrier;
+    the convergence fingerprint is observed while it materializes, so
+    checking every round is free.  Checkpoints happen every round:
+    lineage must not compound across rounds or Catalyst re-analyzes a
+    growing tree.
     """
-    e = barrier(_canon(edges, id_a, id_b))
     # every later read — node set included — comes off this
     # materialized frame, so the (possibly expensive) upstream pair
     # query runs exactly once
+    e, fp = _cut(_canon(edges, id_a, id_b))
+    dtype = e.schema["big"].dataType
+    if fp[0] <= DRIVER_EDGES and (
+        isinstance(dtype, IntegralType) or dtype == StringType()
+    ):
+        return _driver_components(e, dtype)
     e0 = e
-    fp = _fingerprint(e)
 
     for _ in range(max_iter):
         # ---- large-star: for every node u, attach each LARGER
@@ -122,7 +190,7 @@ def connected_components(
         # different u's mapping to the same (v, m) repeat, and the
         # min-aggregate below plus the end-of-round distinct absorb
         # those; the dropped exchange saves one full shuffle per round
-        # (measured with the every-round fingerprint below: 10.1 s ->
+        # (measured with the every-round fingerprint: 10.1 s ->
         # 7.3 s for the 2.2M-edge spatial graph at sf1.0)
         large = (
             sym.join(mins, "u")
@@ -134,7 +202,7 @@ def connected_components(
         # its SMALLER neighbors N<(u); connect all of N<(u) ∪ {u} to
         # the minimum of that set.
         smins = large.groupBy("big").agg(F.min("small").alias("m"))
-        e = barrier(
+        e, nfp = _cut(
             large.join(smins, "big")
             .select(F.col("small").alias("x"), "m")
             .unionByName(smins.select(F.col("big").alias("x"), "m"))
@@ -142,11 +210,6 @@ def connected_components(
             .select(F.col("x").alias("big"), F.col("m").alias("small"))
             .distinct()
         )
-        # fingerprint EVERY round (r6): the check reads the round's
-        # already-materialized checkpoint, ~0.1 s, while a wasted
-        # extra star round costs ~1 s — the every-2nd-round schedule
-        # saved the wrong side of that trade
-        nfp = _fingerprint(e)
         if nfp == fp:
             break
         fp = nfp

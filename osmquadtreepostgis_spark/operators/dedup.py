@@ -85,15 +85,16 @@ def ngram_jaccard_pairs(
 
     Exact verification happens inline: each prefix row carries the
     doc's (distinct) shingle set as a sorted array of GLOBAL RANKS
-    (int64, df-ascending order — :func:`_rank_frame`); the
+    (int64, unique and df-ascending — :func:`_rank_frame`); the
     intersection is size(array_intersect) on longs — no second join.
     A pair sharing several prefix shingles is kept only on the
     rank-smallest shared one (sliced from the two rank arrays), so
     there is no dropDuplicates shuffle.
 
     Shuffles: shingle-key exchange (df count), rank range exchange
-    (vocab-sized), rank equi-join + doc-key aggregate, pair equi-join
-    on prefix ranks. All keys are content-derived; no driver state.
+    (vocab-sized; its bounds come from Spark's range sample), rank
+    equi-join + doc-key aggregate, pair equi-join on prefix ranks.
+    All keys are content-derived; no driver state and no collect.
     """
     return set_jaccard_pairs(_shingles(df, n, id_col, text_col), threshold)
 
@@ -116,9 +117,10 @@ def _shingles(
 
 
 def _rank_frame(dfcnt: DataFrame) -> DataFrame:
-    """(__s, __rk): dense int64 rank of every distinct element under
-    the global (document-frequency asc, element asc) total order given
-    by ``dfcnt`` (__s, __df).
+    """(__s, __rk): an int64 rank of every distinct element, strictly
+    increasing in the global (document-frequency asc, element asc)
+    total order given by ``dfcnt`` (__s, __df). Ranks are unique but
+    not dense.
 
     Replacing each string shingle with its rank is the r6 shuffle-
     bytes optimization (guide §2.3 "narrower types"): every downstream
@@ -126,43 +128,20 @@ def _rank_frame(dfcnt: DataFrame) -> DataFrame:
     the per-candidate array_intersect compares longs instead of
     strings, and the rank ORDER ITSELF encodes the df-ascending prefix
     order, so prefixes are plain ``slice`` calls instead of a second
-    carried array. The rank is a bijection (elements are distinct in
+    carried array. The rank is injective (elements are distinct in
     dfcnt), so set sizes and intersection sizes — and therefore every
     emitted Jaccard — are EXACTLY the string-set values.
 
-    Exact global rank without a single giant sort partition: range-
-    repartition by the order key (per-partition key ranges are
-    disjoint and ordered by partition id, under AQE too — coalescing
-    merges only adjacent ranges), rank within each partition, then add
-    per-partition row-count offsets (one tiny collect). The rank value
-    is boundary-independent: it equals the number of elements ordered
-    before, whatever the sampled range bounds were."""
-    p = dfcnt.repartitionByRange("__df", "__s").withColumn(
-        "__part", F.spark_partition_id()
-    )
-    # pin the partitioning: the offsets collect below and the ranked
-    # output must read the SAME materialized partitions
-    p = barrier(p)
-    cnts = {
-        r["__part"]: r["cnt"]
-        for r in p.groupBy("__part").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offs: dict[int, int] = {}
-    run = 0
-    for pid in sorted(cnts):
-        offs[pid] = run
-        run += cnts[pid]
-    if not offs:
-        return p.select("__s", F.lit(0).cast("long").alias("__rk")).limit(0)
-    omap = F.create_map(
-        *[F.lit(x) for kv in offs.items() for x in kv]
-    )
-    w = Window.partitionBy("__part").orderBy("__df", "__s")
-    return p.select(
-        "__s",
-        (F.row_number().over(w).cast("long") + omap[F.col("__part")]).alias(
-            "__rk"
-        ),
+    Global order without a single giant sort partition and without a
+    driver round trip: range-repartition by the order key (per-
+    partition key ranges are disjoint and ordered by partition id,
+    under AQE too — coalescing merges only adjacent ranges), sort
+    within each partition, and take ``monotonically_increasing_id``
+    (partition id in the high bits, row position in the low bits)."""
+    return (
+        dfcnt.repartitionByRange("__df", "__s")
+        .sortWithinPartitions("__df", "__s")
+        .select("__s", F.monotonically_increasing_id().alias("__rk"))
     )
 
 
@@ -198,28 +177,32 @@ def set_jaccard_pairs(sets: DataFrame, threshold: float) -> DataFrame:
     :func:`..operators.fuzzy.similar_name_pairs` (char trigrams).
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard rounded
     4dp. Semantics and scale shape documented on
-    :func:`ngram_jaccard_pairs`."""
+    :func:`ngram_jaccard_pairs`. Driver cost: one lineage barrier (the
+    per-doc rank-array frame) and no collect."""
     # document frequency per shingle: two-phase groupBy + equi-join
     # back, NOT Window.partitionBy("__s") — a window partition cannot
     # be AQE-split, so a stop-phrase shingle with 10^8+ occurrences
     # would land in one task at web scale. The groupBy gets map-side
     # partial aggregation and the join is AQE-skew-splittable
-    # (VERDICT r2 what's-wrong #1). dfcnt is checkpointed so the
-    # range-sampling pass inside _rank_frame does not re-run it.
+    # (VERDICT r2 what's-wrong #1). No barrier on dfcnt: under AQE the
+    # rank frame's range sample reads the materialized df-count
+    # shuffle, not the explode behind it.
     ex = sets.select("id", F.explode("__sh").alias("__s"))
-    dfcnt = barrier(ex.groupBy("__s").agg(F.count(F.lit(1)).alias("__df")))
+    dfcnt = ex.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
     rankf = _rank_frame(dfcnt)
-    # r6: the per-doc rank-array frame is materialized ONCE
-    # (a barrier) and both self-join arms read it — the old
-    # shape re-ran the whole df+window+collect pipeline per arm
-    # because collect_list defeats ReuseExchange. With ranks instead
-    # of strings the materialized frame is one int64 array per doc
-    # (~8 bytes/shingle vs ~2 string arrays at ~20 bytes/shingle), so
-    # the barrier that used to double the query time now costs a few
-    # MB per million docs (guide §2.3 / §2.4).
+    # the per-doc rank-array frame is materialized ONCE (a barrier)
+    # and both self-join arms read it: collect_list defeats
+    # ReuseExchange, so without the barrier each arm re-runs the df
+    # count, rank and rank join. With ranks instead of strings it is
+    # one int64 array per doc (~8 bytes/shingle vs ~2 string arrays at
+    # ~20 bytes/shingle), a few MB per million docs (guide §2.3 / §2.4).
     arr = barrier(_prefix_frame(sets, rankf, threshold))
     plen = _prefix_len(F.col("__size"), threshold)
-    pref = arr.select(
+    # AQE turns the candidate join into a broadcast hash join whose
+    # probe side reads arr's partitions as they are, so the verify
+    # stage (array_intersect per candidate) runs one task per partition
+    # of arr: fan a few coalesced partitions out to every core first
+    pref = fanout_small_scan(arr).select(
         "id", "__size", "__shfull",
         F.explode(F.slice("__shfull", F.lit(1), plen)).alias("__s"),
     )
@@ -522,9 +505,13 @@ def duplicate_spans(
     ex = fanout_small_scan(df).select(
         F.col(id_col).alias("id"), F.explode(grams).alias("t")
     ).select("id", F.col("t.pos").alias("pos"), F.col("t.g").alias("g"))
+    # the row count, spelled over the id so this branch reads the same
+    # scan columns as the semi-join below and both share one fan-out
+    # exchange (count(1), or a count of any never-null expression,
+    # lets the scan under this branch's exchange drop the id)
     dup_grams = (
         ex.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
+        .agg((F.count("id") + F.count_if(F.col("id").isNull())).alias("__cnt"))
         .filter(F.col("__cnt") > 1)
         .select("g")
     )

@@ -106,26 +106,22 @@ def test_flagship_plans_have_one_python_stage(spark):
         assert nodes == ["MapInArrowExec"], f"{name}: Python stages {nodes}"
 
 
-def _fanned_inputs(df):
-    """One key per input a frame's plan fans out: the nodes under each
-    round-robin exchange, a scan keyed by its paths. Two branches that
-    read different columns of one input (column pruning pushes each
-    branch's columns below its exchange) share a key."""
-
-    def key(node):
-        name = node.getClass().getSimpleName()
-        if name == "FileSourceScanExec":
-            return node.relation().location().rootPaths().toString()
-        return name
-
+def _round_robin_exchanges(df):
+    """The round-robin exchanges of a frame's plan, one per exchange
+    that runs: two that read the same columns of the same input are
+    one exchange at run time (exchange reuse), while two branches that
+    prune one input to different columns each shuffle it."""
     plan = df._jdf.queryExecution().executedPlan()
-    return {
-        tuple(key(n) for n in _nodes(node.child()))
-        for node in _nodes(plan)
-        if node.getClass().getSimpleName() == "ShuffleExchangeExec"
-        and node.outputPartitioning().getClass().getSimpleName()
-        == "RoundRobinPartitioning"
-    }
+    out = []
+    for node in _nodes(plan):
+        if (
+            node.getClass().getSimpleName() == "ShuffleExchangeExec"
+            and node.outputPartitioning().getClass().getSimpleName()
+            == "RoundRobinPartitioning"
+            and not any(node.sameResult(o) for o in out)
+        ):
+            out.append(node)
+    return out
 
 
 @pytest.mark.parametrize(
@@ -139,7 +135,7 @@ def _fanned_inputs(df):
 )
 def test_light_operators_not_fanned_out(name, spark):
     df = entrymod.queries()[name](spark, SF_DIR)
-    assert not _fanned_inputs(df), f"{name}: fanned out"
+    assert not _round_robin_exchanges(df), f"{name}: fanned out"
 
 
 @pytest.mark.parametrize(
@@ -156,7 +152,7 @@ def test_light_operators_not_fanned_out(name, spark):
 )
 def test_heavy_operators_fan_out_once(name, spark):
     df = entrymod.queries()[name](spark, SF_DIR)
-    assert len(_fanned_inputs(df)) == 1, (name, _fanned_inputs(df))
+    assert len(_round_robin_exchanges(df)) == 1, (name, [n.toString() for n in _round_robin_exchanges(df)])
 
 
 def test_lineage_barriers_live_in_session():
